@@ -6,17 +6,23 @@ signal and per-query scaling exponents are visible.
 
 Usage: assemble_bench.py <bench_sf01.json> <baseline_sf01.json>
                          <bench_sf1.json> <baseline_sf1.json> <out.json>
-                         [stream_floor.json] [batch_floor_10x.json]
-(bench files = the Bench stdout JSON line, possibly log-prefixed)
+                         [floor.json]
+(bench files = the Bench stdout JSON line, possibly log-prefixed;
+ floor.json = a graft.FloorProbe artifact taken on the 10x slice the
+   bench_sf1 walls were measured on, since its dispatch constants are
+   subtracted from those walls:
+   sbt "runMain graft.FloorProbe <sliceDir> floor.json q5_period_agg,q14_stream_tumbling,..."
+ a floor whose sf_dir names another slice than the walls' `sf` is refused)
 
-r12: besides the raw `over_2x_baseline_at_sf1` flag list, the artifact
+Besides the raw `over_2x_baseline_at_sf1` flag list, the artifact
 carries `actionable_over_2x` — the COMPUTED actionable set: raw flags
-minus (a) streaming queries adjudicated by a STREAM_FLOOR artifact
-(their wall is micro-batch bookkeeping, decomposed there, not data
-cost) and (b) sub-second-wall floor rows (a >2x ratio against a
-DuckDB wall measured in tenths of a second is a dispatch-floor
-artifact, not a plan defect — the scale artifacts adjudicate those at
-100x). The subtraction is computed from artifacts, never asserted.
+minus (a) streaming queries the floor artifact decomposes per
+micro-batch (their wall is micro-batch bookkeeping, not data cost),
+(b) sub-second-wall floor rows (a >2x ratio against a DuckDB wall
+measured in tenths of a second is a dispatch-floor artifact, not a plan
+defect — the scale artifacts adjudicate those at 100x) and (c) rows
+whose wall minus the measured dispatch_s is sub-second. The subtraction
+is computed from artifacts, never asserted.
 """
 import json
 import os
@@ -28,16 +34,31 @@ def bench(path):
     return json.loads(line[line.index('{'):])
 
 
-def main(b01, d01, b1, d1, out, floor_path=None, batch_floor_path=None):
+def same_slice(walls, floor, walls_path, floor_path):
+    """Refuse a floor artifact taken on another slice than the walls it
+    is subtracted from: dispatch time grows with task count, which grows
+    with the slice. Slices are compared by directory name, so a slice
+    regenerated under another parent directory still matches."""
+    def name(p):
+        return os.path.basename(os.path.normpath(p)) if p else None
+    w, f = name(walls.get("sf")), name(floor.get("sf_dir"))
+    if w is None or w != f:
+        sys.exit(f"{floor_path} was taken on slice {f!r}, but the walls in "
+                 f"{walls_path} on {w!r}: take the floor on the walls' slice")
+
+
+def main(b01, d01, b1, d1, out, floor_path=None):
     s01, s1 = bench(b01), bench(b1)
     k01, k1 = json.load(open(d01)), json.load(open(d1))
-    floor_adjudicated = set()
+    # FloorProbe rows: every row carries dispatch_s; streaming rows also
+    # carry their micro-batch decomposition (n_batches)
+    floor = {}
     if floor_path:
-        floor = json.load(open(floor_path))
-        # keys are "<slice>.<query>" with slices like "sf0.1" — anchor on
-        # the ".q" that starts the query name
-        floor_adjudicated = {k[k.index(".q") + 1:] if ".q" in k else k
-                             for k in floor.get("queries", {})}
+        doc = json.load(open(floor_path))
+        same_slice(s1, doc, b1, floor_path)
+        floor = doc.get("queries", {})
+    stream_floor = {k for k, v in floor.items() if v.get("n_batches")}
+    batch_dispatch = {k: v["dispatch_s"] for k, v in floor.items()}
 
     def sf_block(spark, duck):
         qs = spark["queries"]
@@ -79,25 +100,19 @@ def main(b01, d01, b1, d1, out, floor_path=None, batch_floor_path=None):
     # streaming queries and sub-second-wall floor rows (both walls under
     # 1 s at the 10x slice — ratio noise over a dispatch floor)
     sf1q = blocks["sf1_10x_slice"]["queries_spark_s"]
-    # batch analog (r12 verdict item 3): a BatchFloorProbe artifact over
-    # the same 10x slice carries each probed query's MEASURED dispatch
-    # constant; subtracting it re-tests the >1s arm by measurement
-    batch_dispatch = {}
-    if batch_floor_path:
-        bf = json.load(open(batch_floor_path))
-        batch_dispatch = {k: v["dispatch_s"]
-                          for k, v in bf.get("queries", {}).items()}
+    # each probed query's MEASURED dispatch constant; subtracting it
+    # re-tests the >1s arm by measurement
     adjudication = {}
     for k in over2x:
-        if k in floor_adjudicated:
-            adjudication[k] = "stream-floor artifact decomposes the wall"
+        if k in stream_floor:
+            adjudication[k] = "floor artifact decomposes the stream's micro-batches"
         elif sf1q.get(k, 99.0) < 1.0:
             adjudication[k] = (f"sub-second floor row (spark "
                                f"{sf1q.get(k):.2f}s at 10x)")
         elif k in batch_dispatch and \
                 sf1q.get(k, 99.0) - batch_dispatch[k] < 1.0:
             adjudication[k] = (
-                f"batch-floor artifact: wall {sf1q.get(k):.2f}s minus "
+                f"floor artifact: wall {sf1q.get(k):.2f}s minus "
                 f"measured dispatch {batch_dispatch[k]:.2f}s is sub-second")
     actionable = sorted(set(over2x) - set(adjudication))
     doc = {
@@ -122,4 +137,4 @@ def main(b01, d01, b1, d1, out, floor_path=None, batch_floor_path=None):
 
 
 if __name__ == "__main__":
-    main(*sys.argv[1:8])
+    main(*sys.argv[1:7])

@@ -11,17 +11,20 @@ Usage: assemble_scale_relational.py <bench_10x.json> <bench_100x.json> <out.json
  when given, per-query spark/duckdb ratios land in the artifact, closing
  the round-8 verdict gap: the <=2x criterion measured AT the 100x scale
  the design targets, not inferred from exponents;
- floor files = graft.BatchFloorProbe artifacts over the same slices —
+ floor files = graft.FloorProbe artifacts over the same slices,
+   sbt "runMain graft.FloorProbe <sliceDir> floor_10x.json q5_period_agg,..." —
  when given, each probed query's MEASURED dispatch constant (driver plan
  time + DAG/scheduling gaps, the part of the wall that does not scale
  with data) is subtracted before the >2x test, and the floor-adjusted
- flag lists land alongside the raw ones: r12 verdict item 3, sub-2 s
- rows adjudicated by measurement instead of prose)
+ flag lists land alongside the raw ones: sub-2 s rows adjudicated by
+ measurement instead of prose)
 """
 import json
 import os
 import math
 import sys
+
+from assemble_bench import same_slice
 
 
 def bench(path):
@@ -72,14 +75,16 @@ def main(b10, b100, out, d10=None, d100=None, f10=None, f100=None):
                 ">2x only when the Spark wall also exceeds 1s (sub-second "
                 "walls are the fixed per-query scheduling floor).",
     }
-    def floor_adjust(bench_q, duck_path, floor_path, tag):
+    def floor_adjust(walls, walls_path, duck_path, floor_path, tag):
         """Subtract each probed query's measured dispatch constant
-        (plan_s + gap_s from BatchFloorProbe) before the >2x-and->1s
+        (plan_s + gap_s from FloorProbe) before the >2x-and->1s
         test; unprobed queries keep their raw walls."""
         if not duck_path or not floor_path:
             return
         duck = json.load(open(duck_path))["queries"]
         floor = json.load(open(floor_path))
+        same_slice(walls, floor, walls_path, floor_path)
+        bench_q = walls["queries"]
         disp = {k: v["dispatch_s"] for k, v in floor["queries"].items()}
         adj = {k: round(max(0.0, bench_q[k] - disp.get(k, 0.0)), 3)
                for k in common}
@@ -101,8 +106,8 @@ def main(b10, b100, out, d10=None, d100=None, f10=None, f100=None):
         doc["queries_duckdb_100x_s"] = duck100_q
         doc["spark_vs_duckdb_100x"] = ratio100
         doc["over_2x_and_1s_100x"] = over100
-    floor_adjust(q10, d10, f10, "10x")
-    floor_adjust(q100, d100, f100, "100x")
+    floor_adjust(s10, b10, d10, f10, "10x")
+    floor_adjust(s100, b100, d100, f100, "100x")
     json.dump(doc, open(out, "w"), indent=1, sort_keys=True)
     t10 = sum(q10[k] for k in common)
     t100 = sum(q100[k] for k in common)

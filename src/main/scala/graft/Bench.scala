@@ -37,60 +37,17 @@ object Bench {
     * housekeeping — the prime suspect for round-3's q5 ×5 wall anomaly
     * (alphabetical order runs q5_period_agg right after q59_stream_dedup)
     * with unchanged plan and shuffle bytes. */
-  private def quiesceStreamingState(spark: SparkSession): Unit = {
+  private[graft] def quiesceStreamingState(spark: SparkSession): Unit = {
     try spark.streams.active.foreach(_.stop()) catch { case _: Throwable => () }
     try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     catch { case _: Throwable => () }
   }
 
-  private def buildSession(cpus: String): SparkSession = {
-    // Shuffle/spill/persist scratch on RAM-backed storage when the host
-    // offers it (deployment-sizing, like shuffle.partitions): thread
-    // dumps of a q75 loop showed concurrent tasks serialized inside
-    // FileOutputStream.open0 on the ext4 scratch dir — block-manager
-    // disk writes (persisted shared steps, shuffle files) pay ~135 µs
-    // per file op under 32-way concurrency here. tmpfs A/B (min-merged
-    // 2×, same window): q75 2.04→1.21 s, q76 1.72→1.17 s, subset total
-    // 10.1→9.05 s. Production analog: NVMe/ramdisk shuffle tiers;
-    // cluster managers provide their own local dirs. Env-overridable;
-    // falls back to the JVM default when /dev/shm is absent.
-    val scratch = sys.env.get("SPARK_GRAFT_LOCAL_DIR").orElse {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-scratch")
-      else None
-    }
-    // the engine knobs come from GraftSession.tuned — the bench must
-    // measure the SAME configuration production sessions run, not a
-    // hand-copied subset that drifts when tuned() changes
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-    scratch.foreach(d => b0.config("spark.local.dir", d))
-    val spark = graft.core.GraftSession.tuned(b0
-      // streaming state stores commit per partition per batch; size them
-      // to stateful-key cardinality, not batch scan width (StreamConf).
-      // r13 A/B over the 4 streaming queries (same window, min-of-3 each):
-      // parts=32 14.9 s, 16 12.3 s, 8 7.3–7.7 s, 4 6.1 s, 2 6.8 s — the
-      // per-store-instance tax (provider init + per-batch commit, ×4
-      // stores for a stream-stream join) dominates far below the shuffle
-      // width, and 4 is the measured knee at this state size. Production
-      // sizes this by stateful-key cardinality/arrival rate via the same
-      // conf; env-overridable here for A/B probes.
-      .config("spark.graft.stream.statePartitions",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4"))
-      // single-node scan splits: ~2 of the lake's 16 MB row groups per
-      // task — same deployment-sizing rationale as GraftSession.local
-      .config("spark.sql.files.maxPartitionBytes", (32 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = buildSession(cpus)
+    // the bench measures the SAME configuration production sessions run
+    val cpus = graft.core.GraftSession.defaultCores
+    val spark = graft.core.GraftSession.local(cpus)
     // Untimed warmup: JVM/codegen/scan setup should not be charged to
     // whichever query happens to run first.
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -170,7 +127,6 @@ object Bench {
     // overhead-bound suspects. SPARK_GRAFT_BENCH_FRESH=all re-times every
     // query; =0/off disables the pass.
     val freshMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_FRESH", "auto")
-    val nCpus = cpus.toInt
     val freshNames: Seq[String] = freshMode match {
       case "0" | "off" => Seq.empty
       case "all" => results.map(_._1)
@@ -181,7 +137,7 @@ object Bench {
         // not the universal ~0.3 s fixed per-query scheduling overhead
         val suspects = results.collect {
           case (n, walls, _, None, taskSec, _, _)
-            if walls.min >= 1.0 && walls.min > 5.0 * (taskSec / nCpus) + 0.5 => n
+            if walls.min >= 1.0 && walls.min > 5.0 * (taskSec / cpus) + 0.5 => n
         }
         (afterStreaming ++ suspects).distinct.filter(n => results.exists(_._1 == n))
     }
@@ -190,7 +146,7 @@ object Bench {
       else {
         spark.stop()
         freshNames.map { name =>
-          val s = buildSession(cpus)
+          val s = graft.core.GraftSession.local(cpus)
           s.sparkContext.addSparkListener(meter)
           // same untimed warmup the shared pass got
           s.range(1000000L).selectExpr("sum(id)").collect()

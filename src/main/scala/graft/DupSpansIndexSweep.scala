@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.llm.{DupSpans, DupSpansIndex}
@@ -41,14 +41,7 @@ object DupSpansIndexSweep {
     val work = args.lift(1).getOrElse("/tmp/graft_span_sweep")
     val out = args.lift(2).getOrElse("SCALE_SWEEP_spans.json")
     val cycles = sys.env.getOrElse("SPARK_GRAFT_SWEEP_CYCLES", "6").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
 
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)

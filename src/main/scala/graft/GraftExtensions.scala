@@ -2,68 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions._
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.GraftFunctions
 
 /** Spark-native installation point: `--conf
-  * spark.sql.extensions=graft.GraftExtensions` injects every graft kernel
-  * into the session's function registry at session build time — the
-  * idiomatic alternative to calling GraftFunctions.register(spark) by
-  * hand, and the same mechanism a catalog/optimizer rule would use.
+  * spark.sql.extensions=graft.GraftExtensions` (set by
+  * `GraftSession.tuned`) injects every graft kernel of
+  * `GraftFunctions.table` into the session's function registry at
+  * session build — the same mechanism a catalog/optimizer rule would use.
   * SQL-text users get the functions with zero Scala imports. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private def intLit(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
-
-  private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "float_dot" -> (exprs => FloatDotProduct(exprs(0), exprs(1))),
-    "token_count" -> (exprs => TokenCount(exprs.head)),
-    "rolling_min_hash" -> (exprs => RollingMinHashExpr(exprs.head, 16)),
-    "gram_hashes" -> (exprs => GramHashesExpr(exprs(0), intLit(exprs(1)))),
-    "gram_hashes_winnowed" -> (exprs =>
-      WinnowedGramHashesExpr(exprs(0), intLit(exprs(1)), intLit(exprs(2)))),
-    "top_k_double" -> (exprs =>
-      TopKByDouble(exprs(0), exprs(1), intLit(exprs(2))).toAggregateExpression()),
-    "cdc_boundaries" -> (exprs =>
-      CdcBoundariesExpr(exprs(0), intLit(exprs(1)), intLit(exprs(2)))),
-    "bottom_k_sample" -> (exprs =>
-      BottomKSample(exprs(0), exprs(1), intLit(exprs(2))).toAggregateExpression()),
-    "mg_candidates" -> (exprs =>
-      MgCandidates(exprs(0), intLit(exprs(1))).toAggregateExpression()),
-    "md5_low64" -> (exprs => Md5Low64Expr(exprs.head)),
-    "hll_registers" -> (exprs =>
-      HllRegisters(exprs(0), intLit(exprs(1))).toAggregateExpression()),
-    "hll_merge" -> (exprs =>
-      HllMerge(exprs(0), intLit(exprs(1))).toAggregateExpression()),
-    "multi_distinct_count" -> (exprs =>
-      MultiDistinctCount(exprs).toAggregateExpression()),
-    "bitmap_distinct" -> (exprs =>
-      BitmapDistinct(exprs.head).toAggregateExpression()),
-    "minhash_signature" -> (exprs =>
-      MinHashSignatureExpr(exprs(0), intLit(exprs(1)), intLit(exprs(2)))),
-    "simhash64" -> (exprs => SimHash64Expr(exprs.head)),
-    "lsh_bucket" -> (exprs => LshBucketExpr(exprs(0), intLit(exprs(1)))),
-    "lsh_probe_buckets" -> (exprs =>
-      LshProbeBucketsExpr(exprs(0), intLit(exprs(1)), intLit(exprs(2)))),
-    "lsh_probe_buckets_margin" -> (exprs =>
-      LshProbeBucketsMarginExpr(exprs(0), intLit(exprs(1)), intLit(exprs(2)),
-        exprs(3).eval().asInstanceOf[Number].doubleValue())),
-    "word_shingles" -> (exprs => WordShinglesExpr(exprs(0), intLit(exprs(1)))),
-    "max_word_freq" -> (exprs => MaxWordFreqExpr(exprs.head)),
-    "minhash_bands" -> (exprs =>
-      MinHashBandsExpr(exprs(0), intLit(exprs(1)), intLit(exprs(2)))),
-    "simhash64_md5" -> (exprs => SimHashMd5Expr(exprs.head)),
-    "marker_count" -> (exprs =>
-      MarkerCountExpr(exprs(0), exprs(1).eval().toString.split('|').toSeq)),
-    "bloom_agg" -> (exprs =>
-      org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2), 0, 0)
-        .toAggregateExpression()),
-    "bloom_might_contain" -> (exprs =>
-      org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1))))
-
   override def apply(ext: SparkSessionExtensions): Unit =
-    functions.foreach { case (name, builder) =>
+    GraftFunctions.table.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft.functions", name), builder))
     }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Microbench for the native text kernels (guide §1.2 step 2: per-task
@@ -16,10 +16,10 @@ object KernelProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_KERNEL_REPS", "7").toInt
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.local()
+    // a null document has no bytes to hash; the kernels never see one
     val texts: Array[UTF8String] = spark.read.parquet(s"$sfDir/documents.parquet")
+      .where(col("text").isNotNull)
       .select("text").collect().map(r => UTF8String.fromString(r.getString(0)))
     spark.stop()
     val totalBytes = texts.map(_.numBytes.toLong).sum

@@ -9,7 +9,7 @@ object Plans {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = graft.core.GraftSession.local(8, 8)
+    val spark = graft.core.GraftSession.local()
     names.foreach { n =>
       println(s"\n===================== $n =====================")
       SparkEntry.queries(n)(spark, dir).explain("formatted")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.{TableOptimizer, TxnTable}
@@ -20,13 +19,7 @@ object ScaleOptimize {
     val src = args.headOption.getOrElse("/tmp/graft_scaled_10x")
     val work = args.lift(1).getOrElse("/tmp/graft_scale_opt")
     val out = args.lift(2).getOrElse("SCALE_OPTIMIZE.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
 
     val li = spark.read.parquet(s"$src/lineitem.parquet")
       .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",

@@ -5,7 +5,6 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ANN serving under CONCURRENCY at sweep scale (round-9 verdict item 6):
@@ -25,7 +24,7 @@ import org.apache.spark.sql.functions._
   * exactly how a serving tier shares a cluster.
   *
   * Usage: runMain graft.ScaleServeConcurrency [src] [outDir]
-  *   SPARK_GRAFT_SCALE_FACTOR (default 750), SPARK_GRAFT_CPUS (32),
+  *   SPARK_GRAFT_SCALE_FACTOR (default 750), SPARK_GRAFT_CPUS,
   *   SPARK_GRAFT_SERVE_BATCHES (batches per thread, default 4),
   *   SPARK_GRAFT_SERVE_REUSE=1 reuses an already-built index under outDir.
   */
@@ -34,18 +33,11 @@ object ScaleServeConcurrency {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/graft_serve_conc")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "750").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val batchesPerThread = sys.env.getOrElse("SPARK_GRAFT_SERVE_BATCHES", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // FAIR pools: concurrent serve batches share executors instead of
-      // convoying behind one another's stages — the serving-tier setting
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // FAIR pools: concurrent serve batches share executors instead of
+    // convoying behind one another's stages — the serving-tier setting
+    val spark = graft.core.GraftSession.local(
+      extra = Map("spark.scheduler.mode" -> "FAIR"))
 
     import graft.llm.{IvfIndex, PqIndex, Similarity}
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 
 import graft.llm.{IvfIndex, PqIndex}
 import graft.sources.TxnTable
@@ -29,14 +28,7 @@ object ScaleStreamSweep {
     val docFactor =
       sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR_DOCS", "100").toInt
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "6").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.graft.stream.statePartitions", "8")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
 
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)

@@ -298,19 +298,24 @@ object TextHash {
   /** hashInt(i, Seed) for i < n — the per-permutation seeds of the minhash
     * family. Values are identical to the inline form; the table exists so
     * the per-shingle loop does one hashLong per permutation, not
-    * hashLong + hashInt. Cached for the catalog's n; any other n computes
-    * a throwaway table (same values). */
+    * hashLong + hashInt. Cached for the largest n seen; a smaller n reads
+    * the prefix. A grown table is published only when it is longer than
+    * the cache at publish time, so concurrent calls with different n can
+    * never shrink the shared cache (a lost race recomputes, same values). */
   @volatile private var hashIntCache: Array[Long] = new Array[Long](0)
-  private def hashIntTable(n: Int): Array[Long] = {
+  private[graft] def hashIntTable(n: Int): Array[Long] = {
     val cached = hashIntCache
     if (cached.length >= n) cached
     else {
       val t = new Array[Long](n)
       var i = 0
       while (i < n) { t(i) = XXH64.hashInt(i, Seed); i += 1 }
-      hashIntCache = t
+      publishHashInts(t)
       t
     }
+  }
+  private[graft] def publishHashInts(t: Array[Long]): Unit = synchronized {
+    if (t.length > hashIntCache.length) hashIntCache = t
   }
 
   /** Distinct k-word shingles in first-occurrence order — the native twin

@@ -2,7 +2,6 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 /** Bloom-prefiltered benchmark decontamination — the 100 TB variant of the
   * exact shingle join (pipeline/TrainingQueries q34).
@@ -30,7 +29,6 @@ object BloomDecontaminate {
     * cardinality (one aggregate row), e.g. 2^23 bits = 1 MB. */
   def buildBloom(hashes: DataFrame, hashCol: String,
                  expectedItems: Long, numBits: Long): Array[Byte] = {
-    GraftFunctions.register(hashes.sparkSession)
     hashes
       .select(call_function("bloom_agg", col(hashCol),
         lit(expectedItems), lit(numBits)).as("bf"))
@@ -82,7 +80,6 @@ object BloomDecontaminate {
   def flagStream(stream: DataFrame, bench: DataFrame, k: Int = 8,
                  idCol: String = "doc_id", textCol: String = "text",
                  numBits: Long = 1L << 22): DataFrame = {
-    GraftFunctions.register(stream.sparkSession)
     val benchHashes = bench
       .select(explode(Shingles.shingles(col(textCol), k)).as("g"))
       .select(xxhash64(col("g")).as("gh")).distinct()

@@ -32,10 +32,8 @@ object Shingles {
 
   /** Distinct k-word shingles of `text`, via the native codegen kernel
     * (graft.functions.WordShinglesExpr). */
-  def shingles(text: Column, k: Int): Column = {
-    graft.functions.GraftFunctions.ensureRegistered()
+  def shingles(text: Column, k: Int): Column =
     call_function("word_shingles", text, lit(k))
-  }
 
   /** Interpreted Column twin of [[shingles]] — the property-test pin for
     * the native kernel; not for the hot path. */
@@ -60,10 +58,8 @@ object MinHashLSH {
     * each shingle string, then numHashes derived values
     * h_i = xxhash64(i, H) — so each document costs one string-hash pass
     * plus cheap long re-hashes, not numHashes string-hash passes. */
-  def signature(text: Column, k: Int = 5, numHashes: Int = 64): Column = {
-    graft.functions.GraftFunctions.ensureRegistered()
+  def signature(text: Column, k: Int = 5, numHashes: Int = 64): Column =
     call_function("minhash_signature", text, lit(k), lit(numHashes))
-  }
 
   /** Interpreted Column twin of [[signature]] — same family, HOF-evaluated.
     * Kept as the property-test pin for the native kernel; do not use on the
@@ -80,7 +76,6 @@ object MinHashLSH {
     * minhash_bands kernel (one chained-xxhash64 pass, no per-band string
     * building). */
   def bands(df: DataFrame, sigCol: String, numBands: Int, rowsPerBand: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered()
     df.select(col("*"),
       posexplode(call_function("minhash_bands", col(sigCol),
         lit(numBands), lit(rowsPerBand))).as(Seq("band_idx", "band_hash")))
@@ -175,20 +170,14 @@ object SimHash {
   /** Classic bit-vote simhash via the native codegen kernel
     * (graft.functions.SimHash64Expr): bit j of the fingerprint is 1 iff
     * more word hashes have bit j set than not. One pass per document. */
-  def simhash64(text: Column): Column = {
-    graft.functions.GraftFunctions.ensureRegistered()
-    call_function("simhash64", text)
-  }
+  def simhash64(text: Column): Column = call_function("simhash64", text)
 
   /** SimHash over the PORTABLE md5-low64 word-hash family
     * (graft.functions.SimHashMd5Expr): every value reproducible by any
     * engine with MD5 (DuckDB md5_number_lower), so fingerprints can be
     * verified cross-engine. Prefer [[simhash64]] (xxhash64 family) when
     * raw throughput matters more than portability. */
-  def simhash64Portable(text: Column): Column = {
-    graft.functions.GraftFunctions.ensureRegistered()
-    call_function("simhash64_md5", text)
-  }
+  def simhash64Portable(text: Column): Column = call_function("simhash64_md5", text)
 
   /** Interpreted Column twin of [[simhash64]] (64 array-aggregates) — the
     * property-test pin for the native kernel; not for the hot path. */

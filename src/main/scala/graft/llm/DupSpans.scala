@@ -37,7 +37,6 @@ object DupSpans {
   /** (doc_id, pos, h) for every L-gram window; pos is the 1-based code-point
     * position `substring(text, pos, L)` reads back. */
   def anchors(docs: DataFrame, textCol: String, idCol: String, L: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered()
     docs
       .filter(length(col(textCol)) >= L)
       .select(col(idCol).as("doc_id"),
@@ -63,7 +62,6 @@ object DupSpans {
     * scan-fused, nothing explodes before the winnow. */
   def winnowedAnchors(docs: DataFrame, textCol: String, idCol: String,
                       L: Int, w: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered()
     docs
       .filter(length(col(textCol)) >= L)
       .select(col(idCol).as("doc_id"),

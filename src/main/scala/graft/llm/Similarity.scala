@@ -24,10 +24,7 @@ object Similarity {
     * native codegen kernel (graft.functions.FloatDotProduct) — ~20× the
     * throughput of the interpreted aggregate/zip_with form, same result
     * bit-for-bit. */
-  def dot(a: Column, b: Column): Column = {
-    graft.functions.GraftFunctions.ensureRegistered()
-    call_function("float_dot", a, b)
-  }
+  def dot(a: Column, b: Column): Column = call_function("float_dot", a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -256,7 +253,6 @@ object Similarity {
     // planes in fixed order. Membership row carries its home-bucket flag
     // so each unordered pair is scored once, in the smaller bucket id.
     val member = if (adaptive) {
-      graft.functions.GraftFunctions.ensureRegistered()
       c.select(col("__id"), col("__v"), col("__nrm"),
           posexplode(call_function("lsh_probe_buckets",
             col("__v"), lit(numPlanes), lit(probes))).as(Seq("__p", "bucket")))
@@ -423,10 +419,8 @@ object Similarity {
 
   /** Sign-pattern bucket id from `numPlanes` random hyperplanes, via the
     * native codegen kernel (graft.functions.LshBucketExpr). */
-  def lshBucket(vec: Column, numPlanes: Int = 8): Column = {
-    graft.functions.GraftFunctions.ensureRegistered()
+  def lshBucket(vec: Column, numPlanes: Int = 8): Column =
     call_function("lsh_bucket", vec, lit(numPlanes))
-  }
 
   /** PORTABLE sign-bucket: hyperplane weights are ±1 from the parity of
     * md5-low64("p_d") — a function of (plane, dim) only, so they resolve
@@ -435,7 +429,6 @@ object Similarity {
     * engine with MD5 (DuckDB: md5_number_lower), unlike the xxhash64
     * family in [[lshBucket]]. */
   def portableLshBucket(vec: Column, dim: Int, numPlanes: Int = 8): Column = {
-    graft.functions.GraftFunctions.ensureRegistered()
     val planes = (0 until numPlanes).map { p =>
       val w = Array.tabulate(dim) { d =>
         val parity = graft.functions.TextHash.md5Low64(

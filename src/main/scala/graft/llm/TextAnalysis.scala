@@ -20,10 +20,8 @@ object TextAnalysis {
   /** Occurrences of any of `words` as whole words (Java \b semantics —
     * Unicode-aware boundaries; agrees with RE2 engines on ASCII text),
     * via the native byte-scan kernel (graft.functions.MarkerCountExpr). */
-  def markerCount(text: Column, words: Seq[String]): Column = {
-    graft.functions.GraftFunctions.ensureRegistered()
+  def markerCount(text: Column, words: Seq[String]): Column =
     call_function("marker_count", text, lit(words.mkString("|")))
-  }
 
   /** Regex twin of [[markerCount]] — the property-test pin for the native
     * kernel; not for the hot path (the alternation re-runs per character). */
@@ -58,10 +56,7 @@ object TextAnalysis {
     * standard pre-tokenizer shape. Native byte-scan expression with the
     * exact semantics of regex `[A-Za-z0-9]+|[^A-Za-z0-9\s]` but without a
     * regex engine pass (graft.functions.TokenCount). */
-  def reTokens(text: Column): Column = {
-    graft.functions.GraftFunctions.ensureRegistered()
-    call_function("token_count", text)
-  }
+  def reTokens(text: Column): Column = call_function("token_count", text)
 
   /** Crude BPE estimate: ~4 chars/token. */
   def bpeEstimate(text: Column): Column =

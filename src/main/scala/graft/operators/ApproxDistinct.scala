@@ -36,26 +36,19 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType}
   * 64-bit (md5-low64, DuckDB md5_number_lower). */
 object ApproxDistinct {
   /** md5-low64 of a string column — the cross-engine portable hash. */
-  def md5Low64(c: Column): Column = {
-    graft.functions.GraftFunctions.ensureRegistered()
-    call_function("md5_low64", c)
-  }
+  def md5Low64(c: Column): Column = call_function("md5_low64", c)
 
   /** HLL register array (ARRAY<INT>, length 2^p) over a LONG hash. */
-  def registers(hash: Column, p: Int): Column = {
-    graft.functions.GraftFunctions.ensureRegistered()
+  def registers(hash: Column, p: Int): Column =
     call_function("hll_registers", hash, lit(p))
-  }
 
   /** Merge PERSISTED sketch rows (register arrays) by register-wise
     * max — the sketch-table rollup: store one register array per (day,
     * dim) and answer any window by merging sketches, never rescanning
     * raw data. merge-of-sketches == sketch-of-union EXACTLY (same
     * monoid), spec-pinned. */
-  def mergeRegisters(regs: Column, p: Int): Column = {
-    graft.functions.GraftFunctions.ensureRegistered()
+  def mergeRegisters(regs: Column, p: Int): Column =
     call_function("hll_merge", regs, lit(p))
-  }
 
   /** v_zero: number of empty registers. */
   def vZero(regs: Column): Column =

@@ -47,7 +47,6 @@ object HeavyHitters {
     * frequency desc then item asc. */
   def exact(items: DataFrame, itemCol: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    graft.functions.GraftFunctions.ensureRegistered()
     val spark = items.sparkSession
     val summary = items
       .agg(expr(s"mg_candidates($itemCol, $k)").as("s"))
@@ -99,7 +98,6 @@ object HeavyHitters {
   def exactPerGroup(items: DataFrame, groupCol: String, itemCol: String,
                     k: Int, maxGroups: Int = 65536): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    graft.functions.GraftFunctions.ensureRegistered()
     val spark = items.sparkSession
     val gField = items.schema(groupCol)
     val base = items.select(col(groupCol).as("g"), col(itemCol).as("item"))

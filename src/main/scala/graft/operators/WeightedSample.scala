@@ -70,7 +70,6 @@ object WeightedSample {
     * priority break by id ascending (inherited from top_k_double). */
   def perGroup(df: DataFrame, groupCols: Seq[String], idCol: String,
                weightCol: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered()
     val scored = df.select(
       groupCols.map(col) :+ col(idCol).cast("long").as("__id") :+
         priority(col(weightCol), col(idCol).cast("long")).as("__q"): _*)

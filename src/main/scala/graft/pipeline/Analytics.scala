@@ -25,14 +25,20 @@ object Analytics {
     val mCliente = CoreQueries.q3DimConform(spark, sfDir)
     lake.write(mCliente, lake.layers.Domain, "m_cliente")
 
-    val tVenta = Tables.orders(spark, sfDir).select(
-      Keys.surrogate(col("o_orderkey")).as("id_venta"),
-      Keys.surrogate(col("o_custkey")).as("id_cliente"),
-      Periods.periodOf(col("o_orderdate")).as("id_periodo"),
-      col("o_orderdate").cast(DateType).as("fecha_emision"),
-      upper(trim(col("o_orderstatus"))).as("cod_estado"),
-      col("o_orderpriority").as("cod_prioridad"),
-      dec(col("o_totalprice")).as("imp_total"))
+    // id_cliente must be dim_cliente's key, surrogate(custkey, nationkey)
+    // (q3DimConform): the nation comes from a broadcast customer lookup
+    val custNation = Tables.customer(spark, sfDir)
+      .select(col("c_custkey"), col("c_nationkey"))
+    val tVenta = Tables.orders(spark, sfDir)
+      .join(broadcast(custNation), col("o_custkey") === col("c_custkey"), "left")
+      .select(
+        Keys.surrogate(col("o_orderkey")).as("id_venta"),
+        Keys.surrogate(col("o_custkey"), col("c_nationkey")).as("id_cliente"),
+        Periods.periodOf(col("o_orderdate")).as("id_periodo"),
+        col("o_orderdate").cast(DateType).as("fecha_emision"),
+        upper(trim(col("o_orderstatus"))).as("cod_estado"),
+        col("o_orderpriority").as("cod_prioridad"),
+        dec(col("o_totalprice")).as("imp_total"))
     lake.write(tVenta, lake.layers.Domain, "t_venta", Seq("id_periodo"))
 
     val tVentaDetalle = Tables.lineitem(spark, sfDir).select(

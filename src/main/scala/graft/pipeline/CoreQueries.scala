@@ -94,7 +94,6 @@ object CoreQueries {
       .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
       .select(col("o_orderkey"),
         concat_ws("|", col("r_name"), col("n_name")).as("rn"))
-    graft.functions.GraftFunctions.register(spark)
     graft.operators.DimLookup.forFrameLabeled(dim, "o_orderkey", "rn") match {
       case Some((probe, labels)) =>
         // r10: the probe packs (labelId << 32 | per-label dense ordinal),
@@ -392,7 +391,6 @@ object CoreQueries {
     *    raised fallbackThreshold (GraftSession.tuned) remains only as a
     *    guard band. */
   def q8CustomerMetricsOnePass(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val li = Tables.lineitem(spark, dir)
     // The orders join contributes exactly ONE column (o_custkey; the
     // o_orderkey the distinct counts — and the join predicate — use IS

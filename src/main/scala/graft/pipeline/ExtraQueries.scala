@@ -135,7 +135,6 @@ object ExtraQueries {
     * TypedImperativeAggregate (graft.functions.BottomKSample): one pass,
     * O(k) state per group, reproducible across retries/partitioning. */
   def q32DeterministicSample(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .groupBy(col("source"))
       .agg(expr("bottom_k_sample(md5(text), doc_id, 5)").as("muestra"))

@@ -426,7 +426,6 @@ object LLMQueries {
     * converts the unsigned minimum to the JVM's signed-long ordering —
     * value-checked, not rows-only. */
   def q25Fingerprint(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .selectExpr("doc_id", "rolling_min_hash(text) AS huella",
         "CAST(greatest(length(text) - 16 + 1, 1) AS INT) AS n_ventanas")
@@ -569,7 +568,6 @@ object LLMQueries {
     * mod-2^64). Zero shuffle: boundary scan, pair zip, and chunk explode
     * all pipeline inside the scan stage. */
   def q68CdcChunks(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
       // byte-safe since r6: every position is a UTF-8 BYTE offset (what
@@ -1142,7 +1140,6 @@ object LLMQueries {
     * pruning, before the distance-table loop). */
   def q86AnnPqFiltered(spark: SparkSession, dir: String, m: Int = 4,
                        k: Int = 16, topN: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered()
     pqAdcScored(spark, dir, m, k,
         candWhere = Some(pmod(col("label"), lit(2)) === 0))
       .groupBy(col("query_id"))

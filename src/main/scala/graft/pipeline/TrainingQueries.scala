@@ -84,7 +84,6 @@ object TrainingQueries {
     * the whole quality scan is ZERO-shuffle at any corpus size (vs the
     * naive explode → groupBy → max → join, which shuffles twice). */
   def q35Repetition(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val d = Tables.documents(spark, dir)
     val nWords = size(Shingles.words(col("text")))
     d.select(col("doc_id"),

@@ -208,13 +208,25 @@ object ConformanceLake {
     }
   }
 
+  /** `parent.newSession()` carrying `parent`'s runtime SQL conf: a new
+    * session starts from the context's conf, so without the copy a
+    * caller's own `conf.set` (say, a lower broadcast threshold) would not
+    * reach the plans its conformance jobs run. Copied at creation. */
+  private def child(parent: SparkSession): SparkSession = {
+    val s = parent.newSession()
+    parent.conf.getAll.foreach { case (k, v) =>
+      if (!s.conf.getOption(k).contains(v)) s.conf.set(k, v)
+    }
+    s
+  }
+
   private def conformanceSession(spark0: SparkSession, dir: String): SparkSession =
     cloneCache.compute((spark0, dir), { (key, old) =>
       val fp = fingerprint(dir)
       if (old != null && old.fp == fp) old
       else {
         if (old != null) dropSessionCaches(old.session)
-        val s = key._1.newSession()
+        val s = child(key._1)
         s.conf.set("spark.sql.ansi.enabled", "false")
         // Cache-build memory is batchSize × columns × concurrent tasks:
         // the default 10k-row batches over the closure's wide rows hold
@@ -357,7 +369,7 @@ object ConformanceLake {
   // r10: the residual serve cost of the OVERHEAD-class closures (q70 at
   // 10x, q72 at every scale) is ~20 AQE stages of sub-MB work — per-stage
   // job submission + re-planning, not data. Measured A/B at the 10x slice
-  // (ConfFloorProbe, min-of-4): AQE off + 4 shuffle partitions cuts
+  // (min-of-4, SURVEY.md §7h item 2): AQE off + 4 shuffle partitions cuts
   // t_venta 1.83->0.74 s and m_estructura 1.09->0.45 s, while the same
   // conf poisons CACHE MATERIALIZATION of the heavy closures (q75 first
   // run 36->89 s). So a served plan runs on a NARROW session only when
@@ -371,8 +383,7 @@ object ConformanceLake {
 
   private def narrowSession(clone: SparkSession): SparkSession =
     narrowSessions.computeIfAbsent(clone, { c =>
-      val s = c.newSession()
-      s.conf.set("spark.sql.ansi.enabled", "false")
+      val s = child(c)
       s.conf.set("spark.sql.adaptive.enabled", "false")
       // 4 partitions, not 1 (r11 A/B at the 100x slice, min-of-5 via
       // spark.graft.conformance.narrowPartitions): 1 partition SLOWS

@@ -32,6 +32,11 @@ class AnalyticsPipelineSpec extends AnyFunSuite {
     assert(factSum.compareTo(tvdSum) == 0, s"fact $factSum vs detail $tvdSum")
     assert(dupGrains == 0)
 
+    // star integrity: every fact row resolves its dim_cliente row
+    val orphans = fact.join(lake.read(lake.layers.Analytics, "dim_cliente"),
+      Seq("id_cliente"), "left_anti").count()
+    assert(orphans == 0, s"$orphans of $factCount fact rows find no dim_cliente row")
+
     // idempotence: a second full run must not change row counts or sums
     Analytics.run(spark, sf, root)
     val fact2 = lake.read(lake.layers.Analytics, "fact_cliente_periodo")

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.CoreQueries
 
 object TestSpark {
-  lazy val spark: SparkSession = graft.core.GraftSession.local(cores = 4, shufflePartitions = 4)
+  lazy val spark: SparkSession = graft.core.GraftSession.local(4)
   val sf = "/root/testdata/sf0.001"
 }
 

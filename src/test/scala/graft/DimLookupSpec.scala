@@ -91,7 +91,6 @@ class DimLookupSpec extends AnyFunSuite {
 
   test("labeled lookup: packed label ids + dense per-label ordinals; bitmap distinct is exact") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val dim = Seq((10L, "a"), (11L, "b"), (12L, "a"), (13L, "a"), (14L, "b"))
       .toDF("k", "lbl")
     val (probe, labels) = DimLookup.forFrameLabeled(dim, "k", "lbl").get
@@ -159,7 +158,6 @@ class DimLookupSpec extends AnyFunSuite {
 
   test("bitmap_distinct == count(DISTINCT) on a dense domain; nulls skip; bounds refuse") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // scattered duplicates over a dense 0..999 domain, multiple groups,
     // enough rows to force partial/final merge across partitions
     val df = (0 until 20000).map(i =>

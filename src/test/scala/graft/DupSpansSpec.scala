@@ -533,7 +533,6 @@ class DupSpansSpec extends AnyFunSuite {
   test("top_k_double: k past group size returns the whole group, best-first") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.ensureRegistered()
     val df = Seq((1.0, 10L), (3.0, 30L), (2.0, 20L), (3.0, 5L)).toDF("q", "id")
     val got = df.agg(call_function("top_k_double", col("q"), col("id"), lit(9)))
       .head().getSeq[org.apache.spark.sql.Row](0)
@@ -545,7 +544,6 @@ class DupSpansSpec extends AnyFunSuite {
   test("top_k_double: NaN scores totally ordered (largest), never corrupt the heap") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.ensureRegistered()
     val df = Seq((Double.NaN, 1L), (5.0, 2L), (Double.NaN, 3L), (7.0, 4L),
       (1.0, 5L)).toDF("q", "id")
     val got = df.agg(call_function("top_k_double", col("q"), col("id"), lit(3)))
@@ -558,7 +556,6 @@ class DupSpansSpec extends AnyFunSuite {
   test("top_k_double: wrong argument types fail at analysis time") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.ensureRegistered()
     val df = Seq(("x", 1L)).toDF("q", "id")
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       df.agg(call_function("top_k_double", col("q"), col("id"), lit(2))).head()

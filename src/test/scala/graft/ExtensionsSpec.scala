@@ -33,9 +33,8 @@ class ExtensionsSpec extends AnyFunSuite {
         "SELECT lsh_bucket(array(CAST(1.0 AS FLOAT)), 4) >= 0").head().getBoolean(0))
       assert(s.sql("SELECT marker_count('the cat and the dog', 'the|and')")
         .head().getInt(0) == 3)
-      // completeness: EVERY name in the manual registry must resolve via
-      // the injected catalog too — a kernel added to GraftFunctions but
-      // not GraftExtensions fails here (marker_count taught this)
+      // injection: every name in GraftFunctions.table resolves in a
+      // session that only the extension set up
       val missing = graft.functions.GraftFunctions.Names.filterNot(n =>
         s.catalog.functionExists(n))
       assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
@@ -43,5 +42,21 @@ class ExtensionsSpec extends AnyFunSuite {
       SparkSession.setDefaultSession(prior)
       SparkSession.setActiveSession(prior)
     }
+  }
+
+  test("GraftFunctions.register installs the table into a session lacking it") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val names = graft.functions.GraftFunctions.Names
+    assert(names.distinct.size == names.size, "a kernel name is listed twice")
+    // a sibling session clones the registry, so dropping there leaves the
+    // shared session untouched
+    val s = TestSpark.spark.newSession()
+    names.foreach(n => s.sessionState.functionRegistry.dropFunction(FunctionIdentifier(n)))
+    assert(names.forall(n => !s.catalog.functionExists(n)))
+    graft.functions.GraftFunctions.register(s)
+    val missing = names.filterNot(n => s.catalog.functionExists(n))
+    assert(missing.isEmpty, s"not installed by register: $missing")
+    assert(s.sql("SELECT token_count('hello, world')").head().getInt(0) == 3)
+    assert(TestSpark.spark.catalog.functionExists("token_count"))
   }
 }

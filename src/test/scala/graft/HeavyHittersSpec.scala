@@ -176,7 +176,6 @@ class HeavyHittersSpec extends AnyFunSuite {
   test("mg_candidates superset guarantee holds under forced merges") {
     // every item with freq > n/(k+1) must be in the candidate array no
     // matter how partial buffers merged.
-    graft.functions.GraftFunctions.ensureRegistered()
     val rnd = new scala.util.Random(21)
     val items = rnd.shuffle(Seq.fill(2000)("big") ++ Seq.fill(1200)("mid")
       ++ (1 to 6800).map(i => s"t${i % 900}"))

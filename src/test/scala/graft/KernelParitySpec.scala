@@ -34,6 +34,16 @@ class KernelParitySpec extends AnyFunSuite {
     assert(diff.count() == 0)
   }
 
+  test("minhash seed table: a late shorter publish never shrinks the cache") {
+    import graft.functions.TextHash
+    val grown = TextHash.hashIntTable(96)
+    // a concurrent caller with a smaller n that lost the race publishes last
+    TextHash.publishHashInts(new Array[Long](8))
+    val cached = TextHash.hashIntTable(1)
+    assert(cached.length >= 96, s"cache shrank to ${cached.length}")
+    assert(cached.take(96).sameElements(grown.take(96)))
+  }
+
   test("word_shingles kernel equals the interpreted twin (values AND order)") {
     val diff = corpus.select(
       graft.llm.Shingles.shingles(col("text"), 5).as("native"),
@@ -64,7 +74,6 @@ class KernelParitySpec extends AnyFunSuite {
   }
 
   test("minhash_bands kernel equals the chained-xxhash64 Column form") {
-    graft.functions.GraftFunctions.register(spark)
     val sigs = corpus.select(MinHashLSH.signature(col("text")).as("sig"))
     val diff = sigs.select(
       expr("minhash_bands(sig, 16, 4)").as("native"),
@@ -83,7 +92,6 @@ class KernelParitySpec extends AnyFunSuite {
 
   test("max_word_freq kernel equals the explode/groupBy computation") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val withId = (adversarial ++ randomTexts).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val viaKernel = withId.select(col("id"), expr("max_word_freq(text)").as("k"))
@@ -110,7 +118,6 @@ class KernelParitySpec extends AnyFunSuite {
   }
 
   test("lsh_probe_buckets: home first, one-bit probes, full set = all flips") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val vecs = Seq.fill(200)(Array.fill(rnd.nextInt(96) + 1)(
       (rnd.nextFloat() - 0.5f) * 20f))
@@ -134,7 +141,6 @@ class KernelParitySpec extends AnyFunSuite {
   }
 
   test("margin-threshold multiprobe: prefix of the adaptive order, monotone") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(13)
     val vecs = Seq.fill(200)(Array.fill(rnd.nextInt(96) + 1)(
       (rnd.nextFloat() - 0.5f) * 20f))
@@ -171,7 +177,6 @@ class KernelParitySpec extends AnyFunSuite {
   }
 
   test("cdc_boundaries: scala replay parity, edges, and shift tolerance") {
-    graft.functions.GraftFunctions.register(spark)
     // scala-side replay of the polynomial rule (independent of the kernel's
     // rolling update — a rolling-subtraction bug would diverge here)
     def replay(s: String, w: Int, div: Int): Seq[Int] = {
@@ -219,7 +224,6 @@ class KernelParitySpec extends AnyFunSuite {
     // adversarial + seeded-random strings with multi-byte chars: pins the
     // CODE-POINT indexing contract — substring(text, i+1, w) must
     // hash to exactly result[i] — and the rolling update's algebra
-    graft.functions.GraftFunctions.ensureRegistered()
     val w = 5
     val got = corpus
       .select(col("text"), call_function("gram_hashes", col("text"), lit(w)).as("hs"))

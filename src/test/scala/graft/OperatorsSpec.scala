@@ -109,7 +109,6 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("bottom-k sample is deterministic under repartitioning") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.core.Tables.documents(spark, sf)
     def sample(df: org.apache.spark.sql.DataFrame) =
       df.groupBy($"source")
@@ -124,7 +123,6 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("native functions are callable from SQL text") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT float_dot(array(CAST(1.5 AS FLOAT), CAST(2.0 AS FLOAT)),
         |                 array(CAST(2.0 AS FLOAT), CAST(0.5 AS FLOAT))) AS d,

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{ApproxMetrics, Salting}
+import graft.operators.Salting
 import graft.sources.Bucketing
 
 class ScaleOpsSpec extends AnyFunSuite {
@@ -29,16 +29,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     val out = Salting.twoPhaseSum(df, Seq("k"), saltSource = $"v", buckets = 4,
       sumCols = Seq("v")).as[(String, Double)].collect().toMap
     assert(out == Map("a" -> 6.0, "b" -> 4.0))
-  }
-
-  test("approx distinct is within rsd of exact") {
-    val li = graft.core.Tables.lineitem(spark, sf)
-    val exact = li.select(countDistinct($"l_partkey")).as[Long].head()
-    val approx = ApproxMetrics.approxDistinct(
-      li.withColumn("g", lit(1)), Seq("g"), Seq("l_partkey" -> "apx"), rsd = 0.02)
-      .select("apx").as[Long].head()
-    assert(math.abs(approx - exact).toDouble / exact < 0.1,
-      s"approx $approx vs exact $exact")
   }
 
   test("bucketed join plans without an exchange") {

@@ -32,7 +32,6 @@ class TrainingQueriesSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"q35 must not shuffle:\n$plan")
     // a fully repetitive doc maxes both signals
-    graft.functions.GraftFunctions.register(spark)
     val d = Seq("spam spam spam spam spam spam").toDF("text")
       .selectExpr("max_word_freq(text) AS f").head().getInt(0)
     assert(d == 6)
