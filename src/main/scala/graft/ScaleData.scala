@@ -4,13 +4,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Whole-lake scale-up: replicate EVERY testdata table ×factor with
-  * consistent key shifts, so the full 76-query catalog (TPC-H-ish core,
+  * consistent key shifts, so the full 96-query catalog (TPC-H-ish core,
   * conformance closures, LLM pipeline) can be benchmarked at a larger SF
-  * than the driver ships. Unlike [[ScaleSweep]] (which scales only the
-  * LLM axes and checks invariants), this produces a complete dataset:
-  * foreign keys shift by the SAME per-domain stride as their referenced
-  * primary keys, so join cardinalities scale linearly — k-th copy joins
-  * k-th copy, exactly how a lake that ingested factor× more periods of
+  * than the driver ships. The output is a complete dataset: foreign keys
+  * shift by the SAME per-domain stride as their referenced primary keys,
+  * so join cardinalities scale linearly — k-th copy joins k-th copy,
+  * exactly how a lake that ingested factor× more periods of
   * the same business would behave. Dims (region, nation) stay fixed, as
   * they would at any scale.
   *

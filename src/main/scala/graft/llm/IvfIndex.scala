@@ -165,13 +165,6 @@ object IvfIndex {
         assignmentTable(spark, root).version())
   }
 
-  /** Collect the bounded model back to the driver, cell-ordered (the
-    * array index IS the cell id downstream code relies on). Defaults to
-    * the pinned version so the model always matches the inverted file a
-    * co-resolved read serves from. */
-  def loadModel(spark: SparkSession, root: String): Model =
-    loadModelAt(spark, root, readPin(spark, root)._1)
-
   /** Driver-memory budget for any single collected model or submodel.
     * [[sqrtCells]] caps cells at 65536 by default (≈ 200 MB at 768-dim
     * float — a broadcast dim, not a corpus). Past this size

@@ -31,13 +31,6 @@ object MediaSynth {
   val GifBytes = 13   // sig 6 + screen descriptor 7
   val BmpBytes = 54   // file header 14 + BITMAPINFOHEADER 40
 
-  def bytesOf(id: Long): Int = math.floorMod(id, 5L) match {
-    case 0 => PngBytes
-    case 1 | 2 => JpegBytes
-    case 3 => GifBytes
-    case _ => BmpBytes
-  }
-
   private def beU16(o: ByteArrayOutputStream, v: Int): Unit = {
     o.write((v >> 8) & 0xff); o.write(v & 0xff)
   }
@@ -319,8 +312,6 @@ object MediaSynth {
   def adpcmBlocks(id: Long): Long = 2L + math.floorMod(id * 3L, 6L)
   /** Samples per block (mono): header sample + 2 per data byte. */
   def adpcmSamplesPerBlock(id: Long): Int = 1 + (adpcmBlockAlign(id) - 4) * 2
-  def adpcmTotalSamples(id: Long): Long =
-    adpcmBlocks(id) * adpcmSamplesPerBlock(id)
   /** Block header: initial predictor (i16) — also the block's sample 0. */
   def adpcmPred0(id: Long, blk: Long): Int =
     (math.floorMod(id * 29L + blk * 37L, 65536L) - 32768L).toInt

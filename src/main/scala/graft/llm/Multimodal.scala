@@ -88,11 +88,6 @@ object Multimodal {
       .drop("__pcm")
   }
 
-  /** STUB resize: deterministic digest standing in for the resized bytes;
-    * a real resizer keeps the (payload, target dims) -> bytes signature. */
-  def resizeStub(bin: Column, width: Int, height: Int): Column =
-    sha2(concat(bin, lit(s"${width}x$height").cast("binary")), 256)
-
   /** Batch-decode plumbing: partition-at-a-time iteration with the same
     * row shape a vectorized decoder would use. The per-row `decode` is
     * injected so tests can observe batching; the default is the REAL

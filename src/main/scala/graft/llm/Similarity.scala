@@ -366,21 +366,6 @@ object Similarity {
       .select(col("query_id"), col("rango"), col("neighbor_id"), col("cosine"))
   }
 
-  /** Pairwise expression form (reference baseline; same results). */
-  def bruteForceTopKPairwise(queries: DataFrame, corpus: DataFrame, idCol: String,
-                             vecCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-      .withColumn("__qn", norm(col("__qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-      .withColumn("__cn", norm(col("__cv")))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("__qv"), col("__cv"), col("__qn"), col("__cn")))
-    TopN.perGroup(scored, Seq("query_id"),
-        Seq(col("cosine").desc, col("neighbor_id").asc), k, rankCol = "rango")
-      .select(col("query_id"), col("rango"), col("neighbor_id"), col("cosine"))
-  }
-
   /** recall@k: the fraction of exact top-k (query, neighbor) pairs the
     * approximate result retains — THE metric an ANN configuration is
     * judged by (probes/nCells trade cost against exactly this number).

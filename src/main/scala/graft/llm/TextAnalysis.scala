@@ -23,16 +23,8 @@ object TextAnalysis {
   def markerCount(text: Column, words: Seq[String]): Column =
     call_function("marker_count", text, lit(words.mkString("|")))
 
-  /** Regex twin of [[markerCount]] — the property-test pin for the native
-    * kernel; not for the hot path (the alternation re-runs per character). */
-  def markerCountRegex(text: Column, words: Seq[String]): Column =
-    regexp_count(text, lit("\\b(" + words.mkString("|") + ")\\b")).cast(IntegerType)
-
   def punctCount(text: Column): Column =
     length(regexp_replace(text, "[^.,!?;:]", "")).cast(IntegerType)
-
-  def upperCount(text: Column): Column =
-    length(regexp_replace(text, "[^A-Z]", "")).cast(IntegerType)
 
   val EnglishStopwords: Seq[String] =
     Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "on", "for")

@@ -352,25 +352,6 @@ object DimLookup {
     spark.sparkContext.broadcast(map)
   }
 
-  /** Wrap a built map as a reusable `Column => Column` via the session
-    * FunctionRegistry (per-call registration, the ZOrder convention —
-    * Spark 4 exposes no public Column-from-Expression hook). */
-  def column(spark: SparkSession, bc: Broadcast[LongLongMap],
-             dimDesc: String): Column => Column = {
-    val fn = s"__dim_lookup_${idGen.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(fn,
-      exprs => DimLookupExpr(exprs.head, bc, dimDesc), "built-in")
-    probe => call_function(fn, probe.cast(LongType))
-  }
-
-  def columnStr(spark: SparkSession, bc: Broadcast[LongStringMap],
-                dimDesc: String): Column => Column = {
-    val fn = s"__dim_lookup_str_${idGen.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(fn,
-      exprs => DimLookupStrExpr(exprs.head, bc, dimDesc), "built-in")
-    probe => call_function(fn, probe.cast(LongType))
-  }
-
   /** Lookup builder over an arbitrary uniquely-keyed DataFrame (e.g. a
     * FILTERED dim projection — the inner-join-with-filtered-dim case:
     * rows whose key misses the filtered map drop via NULL, exactly the

@@ -181,7 +181,6 @@ object XlsText {
       require(seg < segs.length, "SST string truncated across CONTINUE")
       off = segs(seg).at
     }
-    def hasMore: Boolean = off < segEnd || seg < segs.length - 1
     def u8v(): Int = {
       if (off >= segEnd) advance()
       val v = u8(wb, off); off += 1; v

@@ -12,9 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
   *     10^9 times shuffles at most one row per map task, not 10^9 rows.
   *  2. The skewed df->gram join runs under AQE with skew-join enabled,
   *     and never degrades to a nested-loop plan.
-  *  3. The salted two-phase fallback (operators/Salting) is value-equal
-  *     to the straight aggregation on exactly this adversarial corpus,
-  *     so the escape hatch is proven before it's ever needed at scale.
   */
 class SkewCurationSpec extends AnyFunSuite {
   import TestSpark._
@@ -66,35 +63,5 @@ class SkewCurationSpec extends AnyFunSuite {
       s"skewed df join degraded to a quadratic plan:\n$plan")
     // correctness under skew: every doc shares its common grams
     assert(joined.count() == 400)
-  }
-
-  test("salted two-phase aggregation is value-equal to the straight form on the hot corpus") {
-    val words = skewed.select(explode(split(trim($"text"), "\\s+")).as("w"))
-      .withColumn("one", lit(1L))
-    val straight = words.groupBy($"w").agg(sum($"one").as("one"))
-      .select($"w", $"one".as("n"))
-    val salted = graft.operators.Salting.twoPhaseSum(
-        words, keys = Seq("w"), saltSource = monotonically_increasing_id(),
-        buckets = 16, sumCols = Seq("one"))
-      .select($"w", $"one".as("n"))
-    assert(straight.exceptAll(salted).isEmpty && salted.exceptAll(straight).isEmpty,
-      "salted two-phase must be value-identical to the straight aggregation")
-    // the salted phase-1 really spreads the hot key: its grouping carries
-    // the salt column, so "the" occupies up to 16 distinct reducer keys
-    val phase1Plan = salted.queryExecution.executedPlan.toString
-    assert(phase1Plan.contains("__salt") || phase1Plan.contains("hashpartitioning"),
-      s"salt phase not visible in plan:\n$phase1Plan")
-  }
-
-  test("salted join spreads a hot key and stays equal to the plain join") {
-    val fact = skewed.select($"doc_id", lit("the").as("w"))
-      .union(skewed.limit(50).select($"doc_id", concat(lit("w"), $"doc_id" % 97).as("w")))
-    val dim = (0 until 97).map(i => (s"w$i", i)).toDF("w", "meta")
-      .union(Seq(("the", -1)).toDF("w", "meta"))
-    val plain = fact.join(dim, Seq("w"))
-    val salted = graft.operators.Salting.saltedJoin(
-      fact, dim, key = "w", buckets = 8, saltSource = $"doc_id")
-    assert(plain.exceptAll(salted).isEmpty && salted.exceptAll(plain).isEmpty,
-      "salted join must reproduce the plain join exactly")
   }
 }

@@ -1,0 +1,62 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The shipped library's top-level surface, read from `src/main/scala` as
+  * text. A new entry point, session builder or environment knob has to be
+  * an edit here, in plain sight:
+  *
+  *  1. `SparkSession.builder` appears only in `core/GraftSession.scala`.
+  *  2. The only mains are the six tools the docs name.
+  *  3. Every `sys.env` / `System.getenv` read names one of the ten
+  *     `SPARK_GRAFT_*` knobs: session cores and scratch dir, and the
+  *     inputs and outputs of Bench, Verify and KernelProbe.
+  */
+class SourceHygieneSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala")
+
+  /** (path relative to `root`, file text) for every Scala source. */
+  private lazy val sources: Seq[(String, String)] = {
+    val walk = Files.walk(root)
+    try walk.iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .map(p => (root.relativize(p).toString, Files.readString(p)))
+      .toVector.sortBy(_._1)
+    finally walk.close()
+  }
+
+  private def filesContaining(needle: String): Seq[String] =
+    sources.collect { case (f, text) if text.contains(needle) => f }
+
+  test("SparkSession.builder appears only in core/GraftSession") {
+    assert(filesContaining("SparkSession.builder") == Seq("graft/core/GraftSession.scala"))
+  }
+
+  test("the only mains are Bench, Verify, Plans, FloorProbe, KernelProbe and ScaleData") {
+    val mains = (filesContaining("def main(") ++ filesContaining("extends App"))
+      .distinct.sorted
+    assert(mains == Seq("Bench", "FloorProbe", "KernelProbe", "Plans", "ScaleData",
+      "Verify").map(n => s"graft/$n.scala"))
+  }
+
+  test("every environment read names one of the ten SPARK_GRAFT_* knobs") {
+    val allowed = Set("CPUS", "LOCAL_DIR", "SF_DIR", "BENCH_RUNS", "BENCH_ONLY",
+      "BENCH_FRESH", "DUCKDB_BASELINE", "BENCH_OUT", "VERIFY_ONLY", "KERNEL_REPS")
+      .map("SPARK_GRAFT_" + _)
+    val read = """(?:sys\.env|System\.getenv)""".r
+    val named = """(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\s*\(\s*"([^"]*)"""".r
+    val offending = for {
+      (f, text) <- sources
+      (line, i) <- text.linesIterator.zipWithIndex
+      reads = read.findAllMatchIn(line).size
+      names = named.findAllMatchIn(line).map(_.group(1)).toSeq
+      if reads != names.size || !names.forall(allowed)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offending.isEmpty,
+      s"environment reads outside the ${allowed.size} knobs:\n" +
+        offending.mkString("\n"))
+  }
+}
