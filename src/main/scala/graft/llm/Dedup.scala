@@ -218,9 +218,9 @@ object NgramJaccard {
   * shape: LSH-band the increment against the standing corpus, verify
   * candidates with exact n-gram Jaccard, and report per-increment-doc
   * match count + deterministic best match. Corpus × corpus pairs are
-  * never scored; at production scale the corpus's banded table is a
-  * maintained artifact bucketed on (band_idx, band_hash), so a daily
-  * increment joins it with shuffle proportional to the increment.
+  * never scored: the corpus is banded on every call, and only corpus
+  * rows sharing a (band_idx, band_hash) bucket with an increment row
+  * reach the Jaccard verify.
   * Fed either from slices (pipeline/LLMQueries q60) or from a
   * transaction log's CDC rows (CorpusPipeline.dedupIncrement).
   *

@@ -95,6 +95,13 @@ object DupSpans {
       .filter(col("g_min") =!= col("g_max"))
       .select(col("doc_id"), col("pos"))
 
+  /** Every anchor ([[anchors]]) or, for `winnowWindow > 1`, the winnowed
+    * subset ([[winnowedAnchors]]). */
+  private def selectedAnchors(docs: DataFrame, textCol: String, idCol: String,
+                              L: Int, winnowWindow: Int): DataFrame =
+    if (winnowWindow <= 1) anchors(docs, textCol, idCol, L)
+    else winnowedAnchors(docs, textCol, idCol, L, winnowWindow)
+
   /** Collision-candidate anchors with their gram's ownership stats:
     * (doc_id, pos, g_min, g_max) where g_min/g_max are the smallest and
     * largest doc_ids sharing the anchor's ACTUAL gram. g_min != g_max
@@ -115,9 +122,7 @@ object DupSpans {
   private def candidateAnchorsWithOwner(docs: DataFrame, textCol: String,
                                         idCol: String, L: Int,
                                         winnowWindow: Int = 1): DataFrame = {
-    val a =
-      if (winnowWindow <= 1) anchors(docs, textCol, idCol, L)
-      else winnowedAnchors(docs, textCol, idCol, L, winnowWindow)
+    val a = selectedAnchors(docs, textCol, idCol, L, winnowWindow)
     val candidates = crossDocHashes(a)
     val candAnchors = a.join(candidates, Seq("h"), "left_semi")
       .join(docs.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
@@ -205,42 +210,42 @@ object DupSpans {
     * [[report]], which only emits documents that anchored — an ingest
     * gate needs the clean rows to admit).
     *
-    * This inline form computes the corpus anchor pass itself (the gate
-    * needs a self-contained plan); production feeds the corpus side from
-    * the PERSISTED inverted file instead — [[DupSpansIndex.flag]] — so a
-    * daily run hashes only its own churn. Scale shape either way: the
-    * corpus side is probed with a SEMI join on the increment's 8-byte
-    * hash set (churn-sized, broadcastable for a daily increment — AQE
-    * decides), gram strings materialize only for hash hits on BOTH
-    * sides, and the final verify is a (h, gram) semi join — collision
-    * can never fabricate a duplicate. */
+    * Scale shape: the corpus side is probed with a SEMI join on the
+    * increment's 8-byte hash set (churn-sized, broadcastable for a daily
+    * increment — AQE decides), gram strings materialize only for hash
+    * hits on BOTH sides, and the final verify is a (h, gram) semi join —
+    * collision can never fabricate a duplicate. */
   def flagIncrement(increment: DataFrame, corpus: DataFrame,
                     textCol: String, idCol: String, L: Int,
                     nCharsCol: String, winnowWindow: Int = 1): DataFrame = {
-    val corA =
-      if (winnowWindow <= 1) anchors(corpus, textCol, idCol, L)
-      else winnowedAnchors(corpus, textCol, idCol, L, winnowWindow)
-    flagAgainst(increment, corpus, corA, textCol, idCol, L, nCharsCol,
-      winnowWindow)
+    val agg = islandSpans(incrementDupAnchors(increment, corpus, textCol,
+        idCol, L, winnowWindow), L)
+      .withColumn("span_chars", col("fin") - col("ini"))
+      .groupBy(col("doc_id"))
+      .agg(sum(col("n_anclas")).as("n_dup_anchors"),
+        sum(col("span_chars")).as("dup_chars"))
+    increment
+      .select(col(idCol).as("doc_id"),
+        col(nCharsCol).cast("long").as("n_chars"))
+      .join(agg, Seq("doc_id"), "left")
+      .na.fill(0L, Seq("n_dup_anchors", "dup_chars"))
+      .withColumn("dup_ratio",
+        col("dup_chars").cast("double") / col("n_chars").cast("double"))
+      .select(col("doc_id"), col("n_dup_anchors"), col("dup_chars"),
+        col("n_chars"), col("dup_ratio"))
+      .orderBy(col("doc_id"))
   }
 
   /** VERIFIED increment-vs-corpus duplicate anchors — the shared core of
-    * the flag ([[flagAgainst]]) and apply ([[dropAgainst]]) sides:
+    * the flag ([[flagIncrement]]) and apply ([[dropIncrement]]) sides:
     * (doc_id, pos) for every increment anchor whose ACTUAL L-gram occurs
-    * in the standing corpus. `corpusAnchors` is (doc_id, pos, h) —
-    * computed inline ([[flagIncrement]]/[[dropIncrement]]) or read from
-    * the standing inverted file ([[DupSpansIndex.flag]]/
-    * [[DupSpansIndex.drop]]); `corpusText` resolves candidate corpus
-    * grams by doc_id (only hash-hit documents' text is touched — at
-    * scale a stats-pruned [[graft.sources.TxnTable]] read). */
-  private[llm] def incrementDupAnchors(increment: DataFrame,
-                                       corpusText: DataFrame,
-                                       corpusAnchors: DataFrame,
-                                       textCol: String, idCol: String,
-                                       L: Int, winnowWindow: Int): DataFrame = {
-    val incA =
-      if (winnowWindow <= 1) anchors(increment, textCol, idCol, L)
-      else winnowedAnchors(increment, textCol, idCol, L, winnowWindow)
+    * in the standing corpus. Corpus grams are resolved by doc_id, so only
+    * hash-hit documents' text is touched. */
+  private def incrementDupAnchors(increment: DataFrame, corpus: DataFrame,
+                                  textCol: String, idCol: String,
+                                  L: Int, winnowWindow: Int): DataFrame = {
+    val incA = selectedAnchors(increment, textCol, idCol, L, winnowWindow)
+    val corpusAnchors = selectedAnchors(corpus, textCol, idCol, L, winnowWindow)
     // probe: hashes on both sides (bounded by the increment's churn).
     // BOTH probe semi joins are hinted shuffle_hash — the q80 lesson,
     // re-learned at the 100x slice: the corpus-anchor side is
@@ -263,33 +268,10 @@ object DupSpans {
       .select(col("doc_id"), col("pos"), col("h"),
         substring_index_safe(col("__text"), col("pos"), L).as("gram"))
     val incG = withGram(candInc, increment)
-    val corG = withGram(candCor, corpusText).select(col("h"), col("gram"))
+    val corG = withGram(candCor, corpus).select(col("h"), col("gram"))
     // verified: the increment anchor's ACTUAL gram occurs in the corpus
     incG.join(corG, Seq("h", "gram"), "left_semi")
       .select(col("doc_id"), col("pos"))
-  }
-
-  private[llm] def flagAgainst(increment: DataFrame, corpusText: DataFrame,
-                               corpusAnchors: DataFrame, textCol: String,
-                               idCol: String, L: Int, nCharsCol: String,
-                               winnowWindow: Int): DataFrame = {
-    val dupA = incrementDupAnchors(increment, corpusText, corpusAnchors,
-      textCol, idCol, L, winnowWindow)
-    val agg = islandSpans(dupA, L)
-      .withColumn("span_chars", col("fin") - col("ini"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("n_anclas")).as("n_dup_anchors"),
-        sum(col("span_chars")).as("dup_chars"))
-    increment
-      .select(col(idCol).as("doc_id"),
-        col(nCharsCol).cast("long").as("n_chars"))
-      .join(agg, Seq("doc_id"), "left")
-      .na.fill(0L, Seq("n_dup_anchors", "dup_chars"))
-      .withColumn("dup_ratio",
-        col("dup_chars").cast("double") / col("n_chars").cast("double"))
-      .select(col("doc_id"), col("n_dup_anchors"), col("dup_chars"),
-        col("n_chars"), col("dup_ratio"))
-      .orderBy(col("doc_id"))
   }
 
   /** The APPLY side of exact-substring dedup (Lee et al. 2022's actual
@@ -336,7 +318,7 @@ object DupSpans {
   }
 
   /** The shared rebuild tail of the apply side ([[dropSpans]] /
-    * [[dropAgainst]]): island-merge `cutAnchors` (doc_id, pos) into
+    * [[dropIncrement]]): island-merge `cutAnchors` (doc_id, pos) into
     * disjoint spans and rewrite every doc in `docs` with those spans
     * cut — (doc_id, n_cut, new_text), untouched docs passing through
     * with n_cut = 0. Pure Column algebra over the per-doc sorted span
@@ -388,27 +370,11 @@ object DupSpans {
     * lever; every shared span >= L + w - 1 still cut, up to w - 1
     * chars may survive at each edge (the [[dropSpans]] relaxed
     * contract), selection a pure function of the text so both sides
-    * anchor the same grams.
-    *
-    * This inline form anchors the corpus itself; production reads the
-    * standing inverted file instead — [[DupSpansIndex.drop]], spec-
-    * pinned equal — so a daily apply hashes only its own churn. */
+    * anchor the same grams. */
   def dropIncrement(increment: DataFrame, corpus: DataFrame,
                     textCol: String, idCol: String, L: Int,
-                    winnowWindow: Int = 1): DataFrame = {
-    val corA =
-      if (winnowWindow <= 1) anchors(corpus, textCol, idCol, L)
-      else winnowedAnchors(corpus, textCol, idCol, L, winnowWindow)
-    dropAgainst(increment, corpus, corA, textCol, idCol, L, winnowWindow)
-  }
-
-  /** Apply-side core over precomputed corpus anchors (inline or from
-    * the standing index) — see [[incrementDupAnchors]]. */
-  private[llm] def dropAgainst(increment: DataFrame, corpusText: DataFrame,
-                               corpusAnchors: DataFrame, textCol: String,
-                               idCol: String, L: Int,
-                               winnowWindow: Int): DataFrame =
+                    winnowWindow: Int = 1): DataFrame =
     cutAndRebuild(increment, textCol, idCol,
-      incrementDupAnchors(increment, corpusText, corpusAnchors, textCol,
-        idCol, L, winnowWindow), L)
+      incrementDupAnchors(increment, corpus, textCol, idCol, L,
+        winnowWindow), L)
 }

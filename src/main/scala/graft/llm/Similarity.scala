@@ -6,8 +6,8 @@ import org.apache.spark.sql.types.DoubleType
 import graft.operators.TopN
 
 /** Embedding similarity: brute-force cosine top-k for bounded query sets,
-  * grid-partitioned exact all-pairs NN, and two approximate scale paths
-  * (random-hyperplane LSH buckets, inverted-file IVF cells).
+  * grid-partitioned exact all-pairs NN, random-hyperplane LSH bucket ids,
+  * inverted-file IVF top-k and two-stage int8-quantized top-k.
   *
   * Dot products run through the native codegen kernel (float_dot) in
   * double precision — strictly left-to-right summation, so results are
@@ -113,8 +113,7 @@ object Similarity {
     * candidate row per (query, cell) — N·B rows, not N².
     *
     * Memory per task is ~2N/B vectors; shuffle-in is 2N·B vector rows.
-    * Exactness is inherent (every pair visited); for approximate-but-cheap
-    * near-dup at corpus scale use [[nearDupInBuckets]].
+    * Exactness is inherent (every pair visited).
     */
   def exactNN(corpus: DataFrame, idCol: String, vecCol: String,
               blocks: Int = 8): DataFrame = {
@@ -235,51 +234,6 @@ object Similarity {
         col("best.cosine").as("cosine"))
   }
 
-  /** Approximate near-dup scale path: nearest neighbor WITHIN each LSH
-    * bucket (plus `probes` extra single-bit-flip probe buckets for recall).
-    * Shuffles on bucket id only — work is sum of bucket² instead of N²,
-    * the 100 TB shape. Recall < 1 by construction; exactNN is the oracle
-    * form for bounded corpora. */
-  def nearDupInBuckets(corpus: DataFrame, idCol: String, vecCol: String,
-                       numPlanes: Int = 8, probes: Int = 0,
-                       adaptive: Boolean = false): DataFrame = {
-    val c = corpus.select(col(idCol).cast("long").as("__id"), col(vecCol).as("__v"))
-      .withColumn("__nrm", norm(col("__v")))
-      .withColumn("__b0", lshBucket(col("__v"), numPlanes))
-    // multiprobe: also visit `probes` hamming-1 buckets. adaptive=true is
-    // query-directed multiprobe — flip the LOWEST-|projection| planes (the
-    // ones a near neighbor most plausibly falls across), via the
-    // lsh_probe_buckets kernel; adaptive=false flips the first `probes`
-    // planes in fixed order. Membership row carries its home-bucket flag
-    // so each unordered pair is scored once, in the smaller bucket id.
-    val member = if (adaptive) {
-      c.select(col("__id"), col("__v"), col("__nrm"),
-          posexplode(call_function("lsh_probe_buckets",
-            col("__v"), lit(numPlanes), lit(probes))).as(Seq("__p", "bucket")))
-    } else {
-      val probeBuckets = array((lit(0) +: (1 to probes).map(lit(_))): _*)
-      c.select(col("__id"), col("__v"), col("__nrm"), col("__b0"),
-          explode(probeBuckets).as("__p"))
-        .withColumn("bucket",
-          when(col("__p") === 0, col("__b0"))
-            .otherwise(col("__b0").bitwiseXOR(
-              expr("shiftleft(CAST(1 AS BIGINT), __p - 1)"))))
-    }
-    val a = member.select(col("bucket"), col("__id").as("id_a"),
-      col("__v").as("__va"), col("__nrm").as("__na"), (col("__p") === 0).as("__home_a"))
-    val b = member.select(col("bucket"), col("__id").as("id_b"),
-      col("__v").as("__vb"), col("__nrm").as("__nb"), (col("__p") === 0).as("__home_b"))
-    a.join(b, Seq("bucket"))
-      .filter(col("id_a") =!= col("id_b") && (col("__home_a") || col("__home_b")))
-      .select(col("id_a").as("query_id"), struct(
-          cosine(col("__va"), col("__vb"), col("__na"), col("__nb")).as("cosine"),
-          (-col("id_b")).as("neg_id")).as("cand"))
-      .groupBy(col("query_id"))
-      .agg(max(col("cand")).as("best"))
-      .select(col("query_id"), (-col("best.neg_id")).as("neighbor_id"),
-        col("best.cosine").as("cosine"))
-  }
-
   /** Int8-quantized corpus layout for serving: per-vector abs-max scale +
     * codes floor(x/s·127+0.5) — the q62 formula as a reusable frame
     * (4× the scan bandwidth of float32 at 100 TB). */
@@ -366,25 +320,6 @@ object Similarity {
       .select(col("query_id"), col("rango"), col("neighbor_id"), col("cosine"))
   }
 
-  /** recall@k: the fraction of exact top-k (query, neighbor) pairs the
-    * approximate result retains — THE metric an ANN configuration is
-    * judged by (probes/nCells trade cost against exactly this number).
-    * Both inputs are top-k frames keyed (queryCol, neighborCol); the
-    * denominator is the exact side, so a result with extra rows cannot
-    * inflate the score. Empty exact side → vacuous 1.0. */
-  def recallAtK(exact: DataFrame, approx: DataFrame,
-                queryCol: String = "query_id",
-                neighborCol: String = "neighbor_id"): Double = {
-    val e = exact.select(col(queryCol), col(neighborCol))
-    val denom = e.count()
-    if (denom == 0L) 1.0
-    else {
-      val hits = e.join(approx.select(col(queryCol), col(neighborCol)),
-        Seq(queryCol, neighborCol), "left_semi").count()
-      hits.toDouble / denom
-    }
-  }
-
   /** JVM-side twins of the float_dot kernel (identical summation order). */
   private[graft] object VectorNorms {
     def dot(a: Array[Float], b: Array[Float]): Double = {
@@ -438,13 +373,6 @@ object Similarity {
     }
     bits.reduce((a, b) => a + b)
   }
-
-  /** Bucketed ANN: assign buckets, then search only within the query's
-    * bucket. Recall < 1 by construction; multiplying probe tables or
-    * planes trades recall for cost. */
-  def lshBuckets(corpus: DataFrame, idCol: String, vecCol: String,
-                 numPlanes: Int = 8): DataFrame =
-    corpus.withColumn("bucket", lshBucket(col(vecCol), numPlanes))
 
   /** Deterministic IVF centroids: the `nCells` corpus vectors with the
     * smallest xxhash64(id) — reproducible across runs/retries without an
@@ -580,30 +508,10 @@ object Similarity {
       cents, idCol, vecCol, k, probes)
   }
 
-  /** The trained IVF model — the bounded centroid array an index is built
-    * against and MAINTAINED against: freeze it, persist assignments, and
-    * every later increment is assigned with [[ivfAssignTo]] instead of
-    * rebuilding (centroid drift is a periodic re-train, not a per-ingest
-    * cost — the standard serving-index lifecycle). */
-  def ivfModel(corpus: DataFrame, idCol: String, vecCol: String,
-               nCells: Int = 64, refineIters: Int = 0): Array[(Int, Array[Float], Double)] =
-    centroids(corpus, idCol, vecCol, nCells, refineIters)
-
-  /** Incremental index maintenance: assign ONLY `increment` to the frozen
-    * model — cost is O(increment · nCells) dot products, the standing
-    * corpus is never rescanned. Unioning the result onto the persisted
-    * assignments equals a full rebuild against the same model bit-for-bit
-    * (spec-pinned), because per-row assignment depends on nothing but the
-    * row and the frozen centroids. Feed it from `TxnTable.changes` for
-    * the churn-bounded daily loop. */
-  def ivfAssignTo(increment: DataFrame, idCol: String, vecCol: String,
-                  cents: Array[(Int, Array[Float], Double)]): DataFrame =
-    ivfAssignWith(increment, idCol, vecCol, cents)
-
-  /** IVF top-k over a PRE-ASSIGNED index frame (`idCol`, `vecCol`,
-    * "cell") and its frozen model — the serving path that never rebuilds:
-    * queries probe their nearest `probes` cells and score only inside
-    * them. */
+  /** IVF top-k over a PRE-ASSIGNED frame (`idCol`, `vecCol`, "cell") and
+    * the centroids it was assigned against — the serving half of
+    * [[ivfTopK]]: queries probe their nearest `probes` cells and score
+    * only inside them. */
   def ivfTopKWith(queries: DataFrame, assignedIndex: DataFrame,
                   cents: Array[(Int, Array[Float], Double)],
                   idCol: String, vecCol: String,

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Open-addressing long→long hash map over one interleaved primitive
   * array — the broadcast payload of [[DimLookup]]. Immutable after
@@ -104,11 +105,10 @@ object LongLongMap {
 final class LongStringMap private (index: LongLongMap, offs: Array[Int],
                                    blob: Array[Byte]) extends Serializable {
   /** The value under `k`, or null when absent (inner-join miss). */
-  def probe(k: Long): org.apache.spark.unsafe.types.UTF8String = {
+  def probe(k: Long): UTF8String = {
     val i = index.probe(k)
     if (i == LongLongMap.Miss) null
-    else org.apache.spark.unsafe.types.UTF8String.fromBytes(
-      blob, offs(i.toInt), offs(i.toInt + 1) - offs(i.toInt))
+    else UTF8String.fromBytes(blob, offs(i.toInt), offs(i.toInt + 1) - offs(i.toInt))
   }
   def sizeBytes: Long = index.sizeBytes + offs.length.toLong * 4 + blob.length
 }

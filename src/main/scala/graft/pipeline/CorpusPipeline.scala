@@ -162,65 +162,6 @@ object CorpusPipeline {
     graft.llm.IncrementalDedup.flag(inc, corpus, minJ = minJ)
   }
 
-  /** The combined per-ingest maintenance loop (r7): ONE TxnTable CDC
-    * read drives BOTH standing jobs a training corpus runs per batch —
-    * churn-bounded near-dup flagging against the standing corpus
-    * ([[dedupIncrement]]) and ANN index maintenance for the survivors
-    * (graft.llm.IvfIndex.append against the FROZEN pinned model;
-    * two-level indexes route through the coarse quantizer). Duplicates
-    * never enter the index — curation feeds serving, in that order.
-    * Whole loop is O(churn · √N), the standing corpus is never
-    * rescanned. Returns the dedup flags and the published assignment
-    * version (unchanged when every increment row was a dup). */
-  def corpusIncrement(docs: graft.sources.TxnTable, fromV: Long, toV: Long,
-                      embeddings: org.apache.spark.sql.DataFrame,
-                      ivfRoot: String,
-                      embIdCol: String = "vec_id",
-                      vecCol: String = "embedding",
-                      minJ: Double = 0.8,
-                      spansRoot: Option[String] = None): (org.apache.spark.sql.DataFrame, Long) = {
-    val nearDup = dedupIncrement(docs, fromV, toV, minJ)
-    // exact-substring coverage rides the same CDC read when a standing
-    // gram-hash inverted file is published (r12): the increment probes
-    // the index (never re-anchoring the corpus), its coverage columns
-    // join the near-dup flags, and the increment's OWN anchors append so
-    // the NEXT batch probes a current index — O(churn·L) end to end,
-    // the exact-substring twin of the MinHash banded-table maintenance.
-    val flags = spansRoot.fold(nearDup) { root =>
-      val inc = docs.changes(fromV, toV)
-        .filter(col("_change_type") === "insert")
-        .select(col("doc_id"), col("text"),
-          length(col("text")).cast("long").as("__nc"))
-      val corpus = docs.readVersion(toV)
-        .join(inc.select("doc_id"), Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("text"))
-      val spans = graft.llm.DupSpansIndex.flag(inc, corpus, root,
-          "text", "doc_id", "__nc")
-        .select(col("doc_id"), col("n_dup_anchors").as("span_anchors"),
-          col("dup_chars").as("span_chars"), col("dup_ratio").as("span_ratio"))
-      graft.llm.DupSpansIndex.append(inc, "text", "doc_id", root): Unit
-      nearDup.join(spans, Seq("doc_id"), "left")
-        .na.fill(0L, Seq("span_anchors", "span_chars"))
-        .na.fill(0.0, Seq("span_ratio"))
-    }
-    val survivors = flags.filter(col("n_matches") === 0)
-      .select(col("doc_id").as(embIdCol))
-    val vecs = embeddings.join(survivors, Seq(embIdCol), "left_semi")
-      .select(col(embIdCol), col(vecCol))
-    val av =
-      if (vecs.isEmpty)
-        graft.llm.IvfIndex.readPin(docs.spark, ivfRoot)._2
-      else graft.llm.IvfIndex.append(vecs, embIdCol, vecCol, ivfRoot)
-    // PQ serving artifacts (when published) ride the same loop: encode
-    // only the appended assignment rows (the CDC the append just wrote),
-    // so the ADC serve never refuses on an index this increment moved —
-    // still O(churn), the standing codes are untouched
-    if (graft.llm.PqIndex.hasCodes(ivfRoot))
-      graft.llm.PqIndex.appendCodes(docs.spark, ivfRoot, embIdCol,
-        vecCol): Unit
-    (flags, av)
-  }
-
   /** Land a raw mixed-format document directory in the stage layer — the
     * reference's extract_data flow (documents decoded where they are
     * listed, extracted text + per-document errors into the lake):

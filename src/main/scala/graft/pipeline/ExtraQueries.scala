@@ -280,6 +280,7 @@ object ExtraQueries {
     val agg = sh.distinct().groupBy(col("lang")).agg(
       ApproxDistinct.registers(
         ApproxDistinct.md5Low64(col("sh")), p).as("__regs"),
+      // no sh is null: KernelParitySpec "word_shingles never emits a null element"
       count(lit(1)).as("n_exact"))
     agg
       .withColumn("v_zero", ApproxDistinct.vZero(col("__regs")))

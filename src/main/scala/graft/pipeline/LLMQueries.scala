@@ -906,12 +906,8 @@ object LLMQueries {
     * per-increment-doc match count + deterministic best match (highest
     * jaccard, ties to the smallest corpus id).
     *
-    * Scale shape (100 TB): in production the corpus's banded table is a
-    * maintained artifact (written once per compaction, bucketed on
-    * (band_idx, band_hash)), so a daily increment joins against it with
-    * NO corpus-side recompute and shuffle proportional to the increment —
-    * this query computes both sides only because the gate needs a
-    * self-contained plan. Recall argument matches q19 (16×4 bands,
+    * Scale shape: both sides are banded on every run. Recall argument
+    * matches q19 (16×4 bands,
     * ≈0.9998 collision at j=0.8); candidate fanout is bounded by
     * increment-bucket × corpus-bucket occupancy rather than bucket². */
   def q60IncrementalDedup(spark: SparkSession, dir: String,
@@ -985,11 +981,7 @@ object LLMQueries {
     * query table is driver-built (bounded by the predicate) and shipped
     * as one literal, so ADC scoring is also scan-fused and the ONLY
     * exchange is the final per-query argmin (map-side partial min,
-    * shuffle = partitions × queries rows). At production scale the
-    * encode writes a codes column 64× smaller than the embeddings, the
-    * codebook is a broadcast artifact, and cell routing composes with
-    * [[graft.llm.IvfIndex]] (IVF-PQ: route by coarse cell, ADC-score
-    * only probed cells' codes). */
+    * shuffle = partitions × queries rows). */
   def q77AnnPq(spark: SparkSession, dir: String, m: Int = 4,
                k: Int = 16): DataFrame =
     pqAdcScored(spark, dir, m, k, candWhere = None)
@@ -1130,14 +1122,11 @@ object LLMQueries {
     * filter-then-score, so the result is a true top-3 of the filtered
     * corpus, never a post-top-k filter returning short rows. Codebooks
     * and per-query distance tables come from the FULL corpus (the
-    * filter narrows candidates, not the geometry — the
-    * PqIndex.topKFiltered law, spec-pinned against the full-vector
-    * filtered serve). Selection runs on the bounded `top_k_double`
-    * aggregate (score = −adc, ties to the smaller neighbor id): O(3)
-    * state per query, map-side merged — the shuffle carries ≤3 pairs
-    * per (query, partition), not the candidate set. Production twin:
-    * graft.llm.PqIndex.topKFiltered (keep-ids semi-join after cell
-    * pruning, before the distance-table loop). */
+    * filter narrows candidates, not the geometry). Selection runs on
+    * the bounded `top_k_double` aggregate (score = −adc, ties to the
+    * smaller neighbor id): O(3) state per query, map-side merged — the
+    * shuffle carries ≤3 pairs per (query, partition), not the candidate
+    * set. */
   def q86AnnPqFiltered(spark: SparkSession, dir: String, m: Int = 4,
                        k: Int = 16, topN: Int = 3): DataFrame = {
     pqAdcScored(spark, dir, m, k,
@@ -1354,9 +1343,7 @@ object LLMQueries {
     * filtered corpus within the probed cells, never a post-top-k filter
     * that silently returns fewer rows. Routing stays that of the FULL
     * index (the filter narrows candidates, not the geometry); queries
-    * probe 3 cells to compensate for the thinner cells. Production
-    * twin: IvfIndex.topKFiltered — the predicate evaluates against the
-    * source metadata table and semi-joins the probed-partition scan. */
+    * probe 3 cells to compensate for the thinner cells. */
   def q82AnnFiltered(spark: SparkSession, dir: String, probes: Int = 3,
                      nCells: Int = 16, k: Int = 3): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
@@ -1607,12 +1594,8 @@ object LLMQueries {
     * on the same row set it scores. The corpus side is probed with a
     * SEMI join on the increment's 8-byte hash set and gram strings
     * materialize only for hash hits on BOTH sides (the q80 exactness
-    * contract). This inline form computes the corpus anchors only
-    * because the gate needs a self-contained plan; production reads them
-    * from the PERSISTED hash-partitioned inverted file instead
-    * (graft.llm.DupSpansIndex — build once, probe + append per batch,
-    * O(churn·L), never a corpus re-anchor), spec-pinned equal to this
-    * twin. */
+    * contract). The corpus anchors are computed on every run
+    * ([[DupSpans.flagIncrement]]). */
   def q85IncrementalSpans(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
     val inc = col("doc_id") % 10 === 3
@@ -1782,13 +1765,11 @@ object LLMQueries {
     * sides (w = 16, the q84/q90 lever): shared spans >= 63 code points
     * are guaranteed cut with up to 15 chars surviving at each edge,
     * and the anchor exchanges are ~8× smaller. Output (doc_id, n_cut,
-    * new_text) for EVERY increment doc. This inline form anchors the
-    * corpus because the oracle needs a self-contained plan; production
-    * reads the standing inverted file instead (DupSpansIndex.drop,
-    * spec-pinned equal), so a daily apply hashes only its own churn.
-    * The oracle composes the q84 winnowed-selection CTEs
-    * (single-sourced string) with the q85 asymmetric-match rule and
-    * the q90 cut/rebuild CTEs — full rebuilt-text compare. */
+    * new_text) for EVERY increment doc ([[DupSpans.dropIncrement]]; the
+    * corpus anchors are computed on every run). The oracle composes
+    * the q84 winnowed-selection CTEs (single-sourced string) with the
+    * q85 asymmetric-match rule and the q90 cut/rebuild CTEs — full
+    * rebuilt-text compare. */
   def q95IncrementDrop(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
     val inc = col("doc_id") % 10 === 3

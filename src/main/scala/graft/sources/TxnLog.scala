@@ -507,9 +507,9 @@ final case class TxnTable(spark: SparkSession, root: String,
     // round-robin repartition spreads every partition's rows over every
     // task, and the dynamic-partition write then emits tasks × partitions
     // files — the exact small-file tax compaction exists to pay down
-    // (measured by the r13 DupSpansIndex sweep: targetFiles=64 over 64
-    // celda partitions wrote 64×64 = 4096 files in the round-robin form,
-    // one per cell in this form)
+    // (measured by the r13 gram-hash index sweep, SCALE_SWEEP_r13_spans.json:
+    // targetFiles=64 over 64 celda partitions wrote 64×64 = 4096 files in
+    // the round-robin form, one per cell in this form)
     val compacted =
       if (partitionBy.isEmpty) read().repartition(targetFiles)
       else read().repartition(targetFiles, partitionBy.map(col): _*)

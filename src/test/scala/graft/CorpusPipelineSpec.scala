@@ -121,94 +121,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
       "changes()-fed dedup must reproduce the catalog q60 exactly")
   }
 
-  test("corpusIncrement: one CDC read drives dedup flags AND the index append") {
-    val docs = graft.core.Tables.documents(spark, sf).select("doc_id", "text")
-    val emb = graft.core.Tables.embeddings(spark, sf)
-      .select("vec_id", "embedding")
-    val txn = graft.sources.TxnTable(spark,
-      Files.createTempDirectory("graft_corpus_inc").toString)
-    val base = docs.filter(col("doc_id") % 10 =!= 3)
-    val v1 = txn.append(base)
-    val v2 = txn.append(docs.filter(col("doc_id") % 10 === 3))
-    // index built on the standing corpus's embeddings only
-    val ivfRoot = Files.createTempDirectory("graft_corpus_ivf").toString
-    val standing = emb.join(base.select(col("doc_id").as("vec_id")),
-      Seq("vec_id"), "left_semi")
-    graft.llm.IvfIndex.buildAndSave(
-      standing, "vec_id", "embedding", ivfRoot): Unit
-    // PQ serving artifacts published on the standing index: the
-    // increment loop must keep them riding the append (r8)
-    graft.llm.PqIndex.buildCodes(spark, ivfRoot, "vec_id", "embedding",
-      graft.llm.PqIndex.train(standing, "vec_id", "embedding", m = 8,
-        k = 32, sampleN = 200, iters = 1)): Unit
-    val (cv0, av0) = graft.llm.IvfIndex.readPin(spark, ivfRoot)
-    val (flags, av) = CorpusPipeline.corpusIncrement(
-      txn, v1, v2, emb, ivfRoot)
-    // flags cover exactly the increment
-    val incIds = docs.filter(col("doc_id") % 10 === 3)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(flags.select("doc_id").collect().map(_.getLong(0)).toSet == incIds)
-    // the appended index rows are exactly the non-dup survivors, assigned
-    // with the SAME frozen centroids (pin: cv unchanged, av advanced)
-    val survivors = flags.filter(col("n_matches") === 0)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val (cv1, av1) = graft.llm.IvfIndex.readPin(spark, ivfRoot)
-    assert(cv1 == cv0, "append must not move the centroid version")
-    assert(av1 == av && av1 > av0)
-    val indexed = graft.llm.IvfIndex.assignmentTable(spark, ivfRoot).read()
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val baseIds = base.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(indexed == baseIds ++ survivors,
-      "index must hold the standing corpus plus exactly the survivors")
-    assert((survivors.nonEmpty || incIds.isEmpty) && incIds.nonEmpty)
-    // the PQ codes rode the same loop: they cover every assignment row
-    // and the ADC serve resolves at the moved pin instead of refusing
-    val nCodes = graft.llm.PqIndex.codesTable(spark, ivfRoot).read().count()
-    assert(nCodes == indexed.size.toLong,
-      s"codes ($nCodes) must cover the appended index (${indexed.size})")
-    assert(graft.llm.PqIndex.topK(
-      emb.filter(col("vec_id") < 5), ivfRoot, "vec_id", "embedding",
-      k = 5, probes = 4).count() > 0)
-  }
-
-  test("corpusIncrement: spansRoot rides the same CDC — coverage columns + index append") {
-    val docs = graft.core.Tables.documents(spark, sf).select("doc_id", "text")
-    val emb = graft.core.Tables.embeddings(spark, sf)
-      .select("vec_id", "embedding")
-    val txn = graft.sources.TxnTable(spark,
-      Files.createTempDirectory("graft_corpus_spans").toString)
-    val base = docs.filter(col("doc_id") % 10 =!= 3)
-    val incDf = docs.filter(col("doc_id") % 10 === 3)
-    val v1 = txn.append(base)
-    val v2 = txn.append(incDf)
-    val ivfRoot = Files.createTempDirectory("graft_spans_ivf").toString
-    graft.llm.IvfIndex.buildAndSave(
-      emb.join(base.select(col("doc_id").as("vec_id")), Seq("vec_id"),
-        "left_semi"), "vec_id", "embedding", ivfRoot): Unit
-    val spansRoot = Files.createTempDirectory("graft_spans_idx").toString
-    graft.llm.DupSpansIndex.build(base, "text", "doc_id", spansRoot,
-      L = 48, w = 16, nCells = 16): Unit
-    val (flags, _) = CorpusPipeline.corpusIncrement(
-      txn, v1, v2, emb, ivfRoot, spansRoot = Some(spansRoot))
-    // coverage columns present, one row per increment doc, and equal to
-    // the standalone index probe
-    val standalone = graft.llm.DupSpansIndex.flag(
-        incDf.withColumn("__nc", length(col("text")).cast("long")),
-        base, spansRoot, "text", "doc_id", "__nc")
-      .select(col("doc_id"), col("n_dup_anchors"), col("dup_chars"))
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-    val got = flags.select("doc_id", "span_anchors", "span_chars")
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-    assert(got == standalone)
-    assert(got.values.exists(_._1 > 0L),
-      "the sf corpus has cross-slice duplicated spans; some must flag")
-    // the increment's anchors were appended: next-day probe sees them
-    val idxDocs = graft.sources.TxnTable(spark, s"$spansRoot/anchors")
-      .read().select("doc_id").distinct()
-      .collect().map(_.getLong(0)).toSet
-    assert(idxDocs.exists(_ % 10 == 3), "increment anchors must be appended")
-  }
-
   test("ingestStage lands a mixed-format corpus: errors preserved, q40 chunk grain") {
     // synthesized mixed corpus: decodable docx + txt + pdf, one
     // unsupported binary, one corrupt office file

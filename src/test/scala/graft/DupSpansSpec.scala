@@ -367,31 +367,6 @@ class DupSpansSpec extends AnyFunSuite {
       (43L, 0L, 0L)), s"got $got")
   }
 
-  test("DupSpansIndex: persisted probe == inline twin (exact and winnowed)") {
-    val corpus = docsDf(
-      1L -> ("corpus body one " + "SHARED-REGION-ALPHA-0123456789 " + "tail"),
-      2L -> ("another corpus doc with " + "SHARED-REGION-BETA-abcdefghij"),
-      3L -> "nothing in common at all")
-    val inc = docsDf(
-      13L -> ("inc doc " + "SHARED-REGION-ALPHA-0123456789 " + "suffix"),
-      23L -> ("prefix " + "SHARED-REGION-BETA-abcdefghij" + " more"),
-      33L -> "a clean increment document")
-    for (w <- Seq(1, 4)) {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft_spanidx_w$w").toString
-      graft.llm.DupSpansIndex.build(corpus, "text", "doc_id", root,
-        L = 8, w = w, nCells = 8)
-      val viaIndex = graft.llm.DupSpansIndex
-        .flag(inc, corpus, root, "text", "doc_id", "n_chars")
-        .collect().map(_.toSeq).toList
-      val inline = DupSpans.flagIncrement(inc, corpus, "text", "doc_id",
-          L = 8, nCharsCol = "n_chars", winnowWindow = w)
-        .collect().map(_.toSeq).toList
-      assert(viaIndex == inline, s"w=$w")
-      assert(viaIndex.exists(r => r(1).asInstanceOf[Long] > 0L))
-    }
-  }
-
   // Independent brute reference for the increment APPLY side: an
   // increment position is cut iff a selected increment anchor covering
   // it has its gram among the corpus's SELECTED grams (the corpus owns).
@@ -426,18 +401,19 @@ class DupSpansSpec extends AnyFunSuite {
       (33L, 0L, "zzWWWWQQQQ"), (43L, 0L, "totally clean")), s"got $got")
   }
 
+  private val bruteCor = Map(
+    1L -> "alpha START-OF-A-LONG-SHARED-REGION-123456 tail one",
+    2L -> "corpus also holds SHORTDUP and other content here")
+  private val bruteInc = Map(
+    13L -> "copy START-OF-A-LONG-SHARED-REGION-123456 suffix",
+    23L -> "has SHORTDUP twice via SHORTDUP repetition",
+    33L -> "an entirely clean increment document sits here")
+
   test("dropIncrement: equals the independent brute reference (exact and winnowed)") {
-    val cor = Map(
-      1L -> "alpha START-OF-A-LONG-SHARED-REGION-123456 tail one",
-      2L -> "corpus also holds SHORTDUP and other content here")
-    val inc = Map(
-      13L -> "copy START-OF-A-LONG-SHARED-REGION-123456 suffix",
-      23L -> "has SHORTDUP twice via SHORTDUP repetition",
-      33L -> "an entirely clean increment document sits here")
     for (w <- Seq(1, 4)) {
-      val expect = bruteIncDrop(inc, cor, L = 6, w = w)
-      val got = DupSpans.dropIncrement(docsDf(inc.toSeq: _*),
-          docsDf(cor.toSeq: _*), "text", "doc_id", L = 6, winnowWindow = w)
+      val expect = bruteIncDrop(bruteInc, bruteCor, L = 6, w = w)
+      val got = DupSpans.dropIncrement(docsDf(bruteInc.toSeq: _*),
+          docsDf(bruteCor.toSeq: _*), "text", "doc_id", L = 6, winnowWindow = w)
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2)))
         .toMap
       assert(got == expect, s"w=$w")
@@ -445,65 +421,19 @@ class DupSpansSpec extends AnyFunSuite {
     }
   }
 
-  test("DupSpansIndex.drop: persisted apply == inline dropIncrement twin") {
-    val corpus = docsDf(
-      1L -> ("corpus body one " + "SHARED-REGION-ALPHA-0123456789 " + "tail"),
-      2L -> ("another corpus doc with " + "SHARED-REGION-BETA-abcdefghij"),
-      3L -> "nothing in common at all")
-    val inc = docsDf(
-      13L -> ("inc doc " + "SHARED-REGION-ALPHA-0123456789 " + "suffix"),
-      23L -> ("prefix " + "SHARED-REGION-BETA-abcdefghij" + " more"),
-      33L -> "a clean increment document")
+  test("flagIncrement: dup_chars equals the brute reference's cut count") {
+    // flag and apply share the verified-anchor core: the chars the apply
+    // side cuts are exactly the coverage the flag side reports
     for (w <- Seq(1, 4)) {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft_spandrop_w$w").toString
-      graft.llm.DupSpansIndex.build(corpus, "text", "doc_id", root,
-        L = 8, w = w, nCells = 8)
-      val viaIndex = graft.llm.DupSpansIndex
-        .drop(inc, corpus, root, "text", "doc_id")
-        .collect().map(_.toSeq).toList
-      val inline = DupSpans.dropIncrement(inc, corpus, "text", "doc_id",
-          L = 8, winnowWindow = w)
-        .collect().map(_.toSeq).toList
-      assert(viaIndex == inline, s"w=$w")
-      assert(viaIndex.exists(r => r(1).asInstanceOf[Long] > 0L))
-      // clean doc passes through byte-identical
-      assert(viaIndex.find(_.head == 33L).get(2) == "a clean increment document")
+      val expect = bruteIncDrop(bruteInc, bruteCor, L = 6, w = w)
+        .map { case (id, (nCut, _)) => id -> nCut }
+      val got = DupSpans.flagIncrement(docsDf(bruteInc.toSeq: _*),
+          docsDf(bruteCor.toSeq: _*), "text", "doc_id", L = 6,
+          nCharsCol = "n_chars", winnowWindow = w)
+        .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+      assert(got == expect, s"w=$w")
+      assert(got(13L) > 0L && got(33L) == 0L)
     }
-  }
-
-  test("DupSpansIndex: append keeps the index equal to a full rebuild on the union") {
-    val corpus = docsDf(
-      1L -> "day zero corpus content SHARED-SPAN-XYZVW here",
-      2L -> "more standing corpus text")
-    val day1 = docsDf(13L -> "first increment with SHARED-SPAN-XYZVW inside")
-    val day2 = docsDf(23L -> "second day also has SHARED-SPAN-XYZVW copy")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_spanidx_append").toString
-    graft.llm.DupSpansIndex.build(corpus, "text", "doc_id", root,
-      L = 8, w = 4, nCells = 8)
-    graft.llm.DupSpansIndex.append(day1, "text", "doc_id", root): Unit
-    // the appended index == a fresh build over corpus ∪ day1 (row sets)
-    val rebuilt = java.nio.file.Files
-      .createTempDirectory("graft_spanidx_rebuild").toString
-    val union = corpus.unionByName(day1)
-    graft.llm.DupSpansIndex.build(union, "text", "doc_id", rebuilt,
-      L = 8, w = 4, nCells = 8)
-    def rows(r: String) = graft.sources.TxnTable(spark, s"$r/anchors")
-      .read().select("doc_id", "pos", "h")
-      .collect().map(_.toSeq).toSet
-    assert(rows(root) == rows(rebuilt))
-    // and day-2 flagging against the appended index == the inline twin
-    // over the full standing union
-    val viaIndex = graft.llm.DupSpansIndex
-      .flag(day2, union, root, "text", "doc_id", "n_chars")
-      .collect().map(_.toSeq).toList
-    val inline = DupSpans.flagIncrement(day2, union, "text", "doc_id",
-        L = 8, nCharsCol = "n_chars", winnowWindow = 4)
-      .collect().map(_.toSeq).toList
-    assert(viaIndex == inline)
-    assert(viaIndex.head(1).asInstanceOf[Long] > 0L,
-      "day-2 duplicate of a day-1 span must be caught via the index")
   }
 
   // -------------------------------------------------- weighted sample

@@ -57,6 +57,33 @@ class KernelParitySpec extends AnyFunSuite {
     assert(diff3.count() == 0)
   }
 
+  test("word_shingles never emits a null element") {
+    // q94 counts distinct (lang, sh) rows with count(1) in place of
+    // countDistinct(sh); the two agree only while no shingle is null
+    val texts = Seq[String](null, "", " ", "\t\n ", "a b", "one two three")
+      .toDF("text")
+    for (k <- Seq(3, 8)) {
+      val got = texts.select(col("text"),
+          graft.llm.Shingles.shingles(col("text"), k).as("sh"))
+        .collect().map(r => Option(r.getString(0)) ->
+          Option(r.getSeq[String](1)).map(_.toList)).toMap
+      // null text: a null array (explode drops it), never a null element
+      assert(got(None).isEmpty)
+      got.foreach { case (t, sh) => if (t.nonEmpty)
+        assert(sh.exists(a => a.nonEmpty && !a.contains(null)), s"$t -> $sh") }
+      // empty and whitespace-only text: one shingle, never null (trim
+      // strips spaces only, so "\t\n " splits into two empty words)
+      assert(got(Some("")).contains(List("")) && got(Some(" ")).contains(List("")))
+      assert(got(Some("\t\n ")).contains(List(" ")))
+      // k at or past the token count: one shingle of every token
+      assert(got(Some("a b")).contains(List("a b")))
+      assert(got(Some("one two three")).contains(List("one two three")))
+      val c = texts.select(explode(graft.llm.Shingles.shingles(col("text"), k)).as("sh"))
+        .distinct().agg(count(lit(1)), countDistinct(col("sh"))).head()
+      assert(c.getLong(0) == c.getLong(1), s"k=$k")
+    }
+  }
+
   test("md5Low64 matches DuckDB md5_number_lower on known values") {
     import org.apache.spark.unsafe.types.UTF8String
     // reference values computed by DuckDB: md5_number_lower = LE u64 of

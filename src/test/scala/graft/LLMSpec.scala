@@ -163,17 +163,6 @@ class LLMSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
   }
 
-  test("nearDupInBuckets finds identical vectors within a bucket") {
-    val df = Seq(
-      (0L, Array(1.0f, 2.0f, 3.0f)), (1L, Array(1.0f, 2.0f, 3.0f)),
-      (2L, Array(-5.0f, 1.0f, 0.5f))).toDF("vec_id", "embedding")
-    val nn = Similarity.nearDupInBuckets(df, "vec_id", "embedding")
-      .as[(Long, Long, Double)].collect()
-      .map { case (q, n, c) => q -> ((n, c)) }.toMap
-    assert(nn(0L)._1 == 1L && math.abs(nn(0L)._2 - 1.0) < 1e-12)
-    assert(nn(1L)._1 == 0L && math.abs(nn(1L)._2 - 1.0) < 1e-12)
-  }
-
   test("ivf: high recall on clustered data, deterministic cells on real embeddings") {
     // IVF's contract is data-adaptive cells: on clustered embeddings (the
     // real-world shape) probing a few cells finds the true neighbor. Build
@@ -201,33 +190,6 @@ class LLMSpec extends AnyFunSuite {
     val a2 = Similarity.ivfAssign(emb, "vec_id", "embedding", nCells = 16)
       .select("vec_id", "cell").as[(Long, Int)].collect().toMap
     assert(a1 == a2)
-  }
-
-  test("ivf incremental maintenance: O(increment) append equals full rebuild, serves new vectors") {
-    val emb = graft.core.Tables.embeddings(spark, sf)
-    val base = emb.filter($"vec_id" % 5 =!= 4)
-    val increment = emb.filter($"vec_id" % 5 === 4)
-    // freeze the model on the standing corpus; the daily loop never re-trains
-    val model = Similarity.ivfModel(base, "vec_id", "embedding", nCells = 16)
-    val idx0 = Similarity.ivfAssignTo(base, "vec_id", "embedding", model)
-    // append path: only the increment is assigned (the corpus never rescanned)
-    val appended = idx0.unionByName(
-      Similarity.ivfAssignTo(increment, "vec_id", "embedding", model))
-    // law: frozen-model assignment is per-row, so append == full rebuild
-    val rebuilt = Similarity.ivfAssignTo(emb, "vec_id", "embedding", model)
-    val a = appended.select($"vec_id", $"cell").as[(Long, Int)].collect().toMap
-    val b = rebuilt.select($"vec_id", $"cell").as[(Long, Int)].collect().toMap
-    assert(a == b, "incremental append must equal the full rebuild bit-for-bit")
-    // serving: a query equal to an increment vector finds it at cosine ~1
-    val probe = increment.limit(1)
-    val probeId = probe.select($"vec_id").as[Long].head()
-    val queries = probe.select(($"vec_id" + 1000000L).as("vec_id"), $"embedding")
-    val served = Similarity.ivfTopKWith(queries, appended, model,
-        "vec_id", "embedding", k = 1, probes = 4)
-      .select($"neighbor_id", $"cosine").as[(Long, Double)].collect()
-    assert(served.length == 1 && served(0)._1 == probeId &&
-      served(0)._2 > 1.0 - 1e-9,
-      s"query cloned from increment vector $probeId must find it: ${served.toSeq}")
   }
 
   test("ivf Lloyd refinement improves quantization and keeps recall") {
@@ -265,23 +227,71 @@ class LLMSpec extends AnyFunSuite {
     df.unpersist(): Unit
   }
 
-  test("nearDupInBuckets: high recall on clustered data, probes never hurt") {
-    val rnd = new scala.util.Random(21)
-    val centers = Array.fill(6)(Array.fill(24)(rnd.nextFloat() * 8f - 4f))
-    val df = (0 until 240).map { i =>
-      (i.toLong, centers(i % 6).map(x => x + (rnd.nextFloat() - 0.5f) * 0.01f))
-    }.toDF("vec_id", "embedding")
-    def found(probes: Int): Map[Long, Double] =
-      Similarity.nearDupInBuckets(df, "vec_id", "embedding", numPlanes = 8, probes = probes)
-        .as[(Long, Long, Double)].collect().map { case (q, _, c) => q -> c }.toMap
-    val base = found(0)
-    val probed = found(2)
-    // cluster-mates are near-identical, so their sign patterns collide:
-    // most vectors must find a >= 0.99-cosine neighbor without probing
-    assert(base.count(_._2 >= 0.99) >= 216, s"recall too low: ${base.size}")
-    // multiprobe can only widen the candidate set
-    assert(probed.keySet.size >= base.keySet.size)
-    assert(base.forall { case (q, c) => probed.get(q).exists(_ >= c - 1e-12) })
+  /** Fraction of the exact top-k (query, neighbor) pairs `approx` keeps. */
+  private def recall(exact: org.apache.spark.sql.DataFrame,
+                     approx: org.apache.spark.sql.DataFrame): Double = {
+    val e = exact.select("query_id", "neighbor_id")
+    e.join(approx.select("query_id", "neighbor_id"),
+      Seq("query_id", "neighbor_id"), "left_semi").count().toDouble / e.count()
+  }
+
+  test("ivf recall@10: full probe is exact; more probes never lose recall") {
+    // the 500-vector sf0.01 slice, next to the shared sf0.001 test slice
+    val emb = graft.core.Tables.embeddings(spark,
+      java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString)
+    val queries = emb.filter(col("vec_id") < 10)
+    val exact = Similarity.bruteForceTopK(queries, emb, "vec_id", "embedding",
+      k = 10)
+    // 23 cells = √500, the cell count of a square-root-sized index
+    def ivf(probes: Int) = Similarity.ivfTopK(queries, emb, "vec_id",
+      "embedding", k = 10, nCells = 23, probes = probes)
+    // probes == nCells → every cell scanned → IVF degenerates to exact
+    assert(recall(exact, ivf(23)) == 1.0,
+      "full-probe IVF must reproduce the exact top-k")
+    // the real trade-off point: 4/23 cells scanned. Uniform-random
+    // embeddings are IVF's adversarial case (no cluster structure for
+    // the cells to exploit: true neighbors are near-orthogonal and
+    // scatter across cells), so the absolute number is modest — measured
+    // 0.31 on this deterministic corpus. Pin a floor under it, plus the
+    // law that buying more probes never costs recall.
+    val r4 = recall(exact, ivf(4))
+    val r12 = recall(exact, ivf(12))
+    assert(r4 >= 0.25, s"recall@10 with 4/23 probes fell to $r4")
+    assert(r12 >= r4, s"recall must be monotone in probes: $r12 < $r4")
+  }
+
+  test("ivf on a clusterable corpus: 4 of 32 probes recover near-exact top-10") {
+    // Real embedding corpora are clustered, and that structure is the
+    // whole reason IVF works: a query's true neighbors share its
+    // cluster, the cluster maps to few cells, probes cover them.
+    // Deterministic planted-cluster corpus: 20 unit centers, 50 points
+    // each at noise sigma 0.15 — the complement of the uniform-random
+    // adversarial floor above.
+    val dim = 16
+    def gaussians(seed: Long, n: Int): Array[Float] = {
+      val r = new scala.util.Random(seed)
+      Array.fill(n)(r.nextGaussian().toFloat)
+    }
+    def unit(seed: Long): Array[Float] = {
+      val v = gaussians(seed, dim)
+      val n = math.sqrt(v.map(x => x * x.toDouble).sum).toFloat
+      v.map(_ / n)
+    }
+    val centers = (0 until 20).map(c => unit(1000L + c))
+    val rows = (0L until 1000L).map { i =>
+      val noise = gaussians(2000L + i, dim)
+      val v = centers((i % 20).toInt).zip(noise)
+        .map { case (a, b) => a + 0.15f * b }
+      (i, v)
+    }
+    val corpus = rows.toDF("vec_id", "embedding")
+    val qs = corpus.filter(col("vec_id") < 20) // one query per cluster
+    val exact = Similarity.bruteForceTopK(qs, corpus, "vec_id", "embedding",
+      k = 10)
+    // 32 cells ≈ √1000, Lloyd-refined twice
+    val r = recall(exact, Similarity.ivfTopK(qs, corpus, "vec_id",
+      "embedding", k = 10, nCells = 32, probes = 4, refineIters = 2))
+    assert(r >= 0.85, s"clustered-corpus recall@10 with 4/32 probes = $r")
   }
 
   test("query-directed multiprobe beats fixed-order probing per probe") {
@@ -292,10 +302,28 @@ class LLMSpec extends AnyFunSuite {
       // across low-margin planes, which is the case probing exists for
       (i.toLong, centers(i % 6).map(x => x + (rnd.nextFloat() - 0.5f) * 0.6f))
     }.toDF("vec_id", "embedding")
-    def goodPairs(probes: Int, adaptive: Boolean): Int =
-      Similarity.nearDupInBuckets(df, "vec_id", "embedding",
-          numPlanes = 8, probes = probes, adaptive = adaptive)
+    // each vector joins its home bucket plus `probes` one-bit flips: the
+    // lowest-margin planes first (lsh_probe_buckets) or planes 0, 1, ...
+    // in fixed order; pairs meet in a bucket that is home to one side
+    def goodPairs(probes: Int, adaptive: Boolean): Int = {
+      val member =
+        if (adaptive) df.select($"vec_id", $"embedding",
+          posexplode(call_function("lsh_probe_buckets", $"embedding", lit(8),
+            lit(probes))).as(Seq("p", "bucket")))
+        else df.select($"vec_id", $"embedding",
+            Similarity.lshBucket($"embedding", 8).as("b0"),
+            explode(sequence(lit(0), lit(probes))).as("p"))
+          .withColumn("bucket", when($"p" === 0, $"b0")
+            .otherwise($"b0".bitwiseXOR(expr("shiftleft(CAST(1 AS BIGINT), p - 1)"))))
+      def side(t: String) = member.select($"bucket", $"vec_id".as(s"id_$t"),
+        $"embedding".as(s"v_$t"), ($"p" === 0).as(s"home_$t"))
+      side("a").join(side("b"), "bucket")
+        .filter($"id_a" =!= $"id_b" && ($"home_a" || $"home_b"))
+        .groupBy($"id_a")
+        .agg(max(Similarity.cosine($"v_a", $"v_b", Similarity.norm($"v_a"),
+          Similarity.norm($"v_b"))).as("cosine"))
         .filter(col("cosine") >= 0.99).count().toInt
+    }
     val naive = goodPairs(2, adaptive = false)
     val directed = goodPairs(2, adaptive = true)
     // flipping the two lowest-margin planes must recover at least as many
@@ -392,14 +420,6 @@ class LLMSpec extends AnyFunSuite {
       .orderBy("doc_id").collect()
     assert(exact(0).getAs[Long]("n_matches") == 600L)
     assert(exact(0).getAs[Long]("best_match") == 1000L)
-  }
-
-  test("lsh buckets put identical vectors together") {
-    val df = Seq((0L, Array(1.0f, 2.0f, 3.0f)), (1L, Array(1.0f, 2.0f, 3.0f)))
-      .toDF("vec_id", "embedding")
-    val b = Similarity.lshBuckets(df, "vec_id", "embedding").select("bucket")
-      .as[Long].collect()
-    assert(b(0) == b(1))
   }
 
   test("rolling min hash: superset text can only lower the min") {

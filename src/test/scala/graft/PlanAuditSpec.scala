@@ -129,9 +129,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // hash semi joins (probe), two shuffle_hash text re-reads (gram
     // materialization per side), the (h, gram) verify semi, the island
     // window, the all-increment left join and the presentation sort —
-    // each bounded by churn or hash hits, none corpus-quadratic; the
-    // production twin (DupSpansIndex probe) replaces the corpus anchor
-    // subtree with a pruned index read. 13 = the r12 shuffle_hash form:
+    // each bounded by churn or hash hits, none corpus-quadratic.
+    // 13 = the r12 shuffle_hash form:
     // the probe semi joins exchange BOTH sides on h (3 more exchanges
     // than the broadcast-semi form, which collected ~1 GB of corpus
     // anchor hashes to the driver at the 100x slice and OOMed — the q80

@@ -13,6 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  3. Every `sys.env` / `System.getenv` read names one of the ten
   *     `SPARK_GRAFT_*` knobs: session cores and scratch dir, and the
   *     inputs and outputs of Bench, Verify and KernelProbe.
+  *  4. Every scaladoc `[[link]]` names something `src/main` defines or
+  *     the linking file imports, so a deleted object leaves no doc
+  *     pointing at it.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -58,5 +61,32 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offending.isEmpty,
       s"environment reads outside the ${allowed.size} knobs:\n" +
         offending.mkString("\n"))
+  }
+
+  test("every scaladoc link names a src/main definition or an import of its file") {
+    val defined = sources.flatMap { case (_, text) =>
+      """\b(?:class|object|trait|def|val|var|type)\s+(\w+)""".r
+        .findAllMatchIn(text).map(_.group(1)) ++
+        """(?m)^package\s+([\w.]+)""".r
+          .findAllMatchIn(text).flatMap(_.group(1).split('.'))
+    }.toSet
+    val importLine = """(?m)^\s*import\s+([\w.]+?)(?:\.\{([^}]*)\})?\s*$""".r
+    val offending = for {
+      (f, text) <- sources
+      imported = importLine.findAllMatchIn(text).flatMap { m =>
+        Option(m.group(2)).fold(Seq(m.group(1).split('.').last))(
+          _.split("[,=>]").map(_.trim).filter(_.nonEmpty).toSeq)
+      }.toSet
+      doc <- """(?s)/\*\*.*?\*/""".r.findAllMatchIn(text)
+      link <- """\[\[([^\]]+)\]\]""".r.findAllMatchIn(doc.matched)
+      segs = link.group(1).split("[.#]").toSeq
+      // an imported head names an external type whose members we cannot see
+      if !imported(segs.head) && !segs.forall(defined)
+    } yield {
+      val line = text.substring(0, doc.start + link.start).count(_ == '\n') + 1
+      s"$f:$line: [[${link.group(1)}]]"
+    }
+    assert(offending.isEmpty,
+      "scaladoc links to nothing in src/main:\n" + offending.mkString("\n"))
   }
 }
