@@ -221,25 +221,26 @@ object TextHash {
     while (hi > lo && bytes(hi - 1) == ' ') hi -= 1
     // growable primitive buffer — a boxed ArrayList here charged every
     // token a Long allocation across every kernel of this family
+    // (grow-and-store is written out at both sites: a local def capturing
+    // out/n would lift them into heap cells)
     var out = new Array[Long](16)
     var n = 0
-    def add(v: Long): Unit = {
-      if (n == out.length) out = java.util.Arrays.copyOf(out, n << 1)
-      out(n) = v
-      n += 1
-    }
     var i = lo
     var tokStart = lo
     while (i < hi) {
       if (isWs(bytes(i))) {
-        add((tokStart.toLong << 32) | (i & 0xffffffffL))
+        if (n == out.length) out = java.util.Arrays.copyOf(out, n << 1)
+        out(n) = (tokStart.toLong << 32) | (i & 0xffffffffL)
+        n += 1
         while (i < hi && isWs(bytes(i))) i += 1
         tokStart = i
       } else i += 1
     }
     // final token: the remainder, or (with a trailing/empty input) an empty
     // token — Java split with limit -1 keeps it
-    add((tokStart.toLong << 32) | (hi & 0xffffffffL))
+    if (n == out.length) out = java.util.Arrays.copyOf(out, n << 1)
+    out(n) = (tokStart.toLong << 32) | (hi & 0xffffffffL)
+    n += 1
     if (n == out.length) out else java.util.Arrays.copyOf(out, n)
   }
 

@@ -5,6 +5,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ManifestScan
 import graft.operators.MergeSCD1
 
 /** Minimal version-file transaction log: the crash-safe commit protocol the
@@ -26,9 +27,14 @@ import graft.operators.MergeSCD1
   *    files under fresh UUID names, then publishes a NEW manifest listing
   *    the complete live set. The manifest link is the commit point.
   *  - Readers resolve the highest manifest version and read exactly the
-  *    files it lists (basePath keeps partition-column inference). A crash
-  *    before the manifest link leaves orphan data files and the previous
-  *    version fully intact — no torn table states, ever.
+  *    files it lists (basePath keeps partition-column inference). The
+  *    manifest IS the file listing: every read stats the listed files on
+  *    the driver and launches no listing job; the merged footer schema is
+  *    cached per exact file list (path, length, mtime of each file) plus
+  *    the session's parquet schema-conversion settings, never per root or
+  *    version alone. A crash before the manifest link leaves orphan data
+  *    files and the previous version fully intact — no torn table states,
+  *    ever.
   *  - Commits carry the version they were based on; a concurrent commit of
   *    the same version loses with a [[TxnConflictException]] (optimistic
   *    concurrency). Cross-process writers should additionally take the
@@ -176,10 +182,16 @@ final case class TxnTable(spark: SparkSession, root: String,
   def readVersion(v: Long): DataFrame = {
     val es = entriesFull(v)
     require(es.nonEmpty, s"table $root has no committed version $v")
-    spark.read.option("basePath", dataDir.toString)
-      .option("mergeSchema", "true")
-      .parquet(es.map(e => filePath(e).toString): _*)
+    scan(es)
   }
+
+  /** The one reader of data files: the relation over exactly `es`, built
+    * from the manifest with no directory listing (see [[ManifestScan]]).
+    * It equals the `basePath` + `mergeSchema` parquet read of the same
+    * files, so partition columns infer from the `data/` layout and
+    * schema-evolved versions read with missing columns as null. */
+  private def scan(es: Seq[TxnEntry]): DataFrame =
+    ManifestScan.parquet(spark, dataDir.toString, es.map(e => filePath(e).toString))
 
   /** Stats-pruned range read on the FIRST tracked column: scans only the
     * files whose manifest [min,max] can contain values in [lo, hi] — the
@@ -213,10 +225,7 @@ final case class TxnTable(spark: SparkSession, root: String,
     val pred = boxes.map { case (c, lo, hi) =>
       col(c).between(lit(lo), lit(hi)) }.reduce(_ && _)
     if (hits.isEmpty) readVersion(v).filter(pred).limit(0)
-    else spark.read.option("basePath", dataDir.toString)
-      .option("mergeSchema", "true")
-      .parquet(hits.map(e => filePath(e).toString): _*)
-      .filter(pred)
+    else scan(hits).filter(pred)
   }
 
   /** Partition-pruned read, resolved driver-side from the manifest: keeps
@@ -233,9 +242,7 @@ final case class TxnTable(spark: SparkSession, root: String,
     require(es.nonEmpty, s"table $root has no committed version $v")
     val hits = es.filter(e => e.part.isEmpty || keep(e.part))
     if (hits.isEmpty) readVersion(v).limit(0)
-    else spark.read.option("basePath", dataDir.toString)
-      .option("mergeSchema", "true")
-      .parquet(hits.map(e => filePath(e).toString): _*)
+    else scan(hits)
   }
 
   /** Row-level changes between two committed versions, cost bounded by
@@ -255,10 +262,7 @@ final case class TxnTable(spark: SparkSession, root: String,
       s"table $root has no committed version $fromV (vacuumed?)")
     require(after.nonEmpty, s"table $root has no committed version $toV")
     def readSet(es: Set[TxnEntry]): Option[DataFrame] =
-      if (es.isEmpty) None
-      else Some(spark.read.option("basePath", dataDir.toString)
-        .option("mergeSchema", "true")
-        .parquet(es.toSeq.map(e => filePath(e).toString): _*))
+      if (es.isEmpty) None else Some(scan(es.toSeq))
     val added = readSet(after -- before)
     val removed = readSet(before -- after)
     // align schema-evolved sides: missing columns read as null
@@ -317,8 +321,7 @@ final case class TxnTable(spark: SparkSession, root: String,
     if (cols.isEmpty || staged.isEmpty) return staged
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c")))
-    val rows = spark.read.option("basePath", dataDir.toString)
-      .parquet(staged.map(e => filePath(e).toString): _*)
+    val rows = scan(staged)
       .groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -434,7 +437,9 @@ final case class TxnTable(spark: SparkSession, root: String,
   def upsert(df: DataFrame, keys: Seq[String], partitionBy: Seq[String] = Nil): Long = {
     val base = version()
     if (base == 0) return commit(stage(df, partitionBy), base)
-    val current = read()
+    // the stats-pruned path needs only its schema, and only when no file
+    // matches: it must not build a whole-table relation up front
+    lazy val current = read()
     val prunable = statsColumns.filter(keys.contains)
     prunable match {
       case pk if pk.nonEmpty =>
@@ -459,9 +464,7 @@ final case class TxnTable(spark: SparkSession, root: String,
             })
             val touchedNames: Set[String] =
               if (candidates.isEmpty) Set.empty
-              else spark.read.option("basePath", dataDir.toString)
-                .option("mergeSchema", "true")
-                .parquet(candidates.map(e => filePath(e).toString): _*)
+              else scan(candidates)
                 .withColumn("__f", input_file_name())
                 .join(df.select(keys.map(col): _*).distinct(), keys, "left_semi")
                 .select("__f").distinct().collect()
@@ -474,9 +477,7 @@ final case class TxnTable(spark: SparkSession, root: String,
         val targetRows =
           if (touched.isEmpty)
             spark.createDataFrame(java.util.Collections.emptyList[Row](), current.schema)
-          else spark.read.option("basePath", dataDir.toString)
-            .option("mergeSchema", "true")
-            .parquet(touched.map(e => filePath(e).toString): _*)
+          else scan(touched)
         val merged = MergeSCD1.merge(targetRows, df, keys)
         commit(kept ++ stage(merged, partitionBy), base)
       case _ =>

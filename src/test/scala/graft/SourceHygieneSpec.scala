@@ -16,6 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  4. Every scaladoc `[[link]]` names something `src/main` defines or
   *     the linking file imports, so a deleted object leaves no doc
   *     pointing at it.
+  *  5. `TxnTable` reads data files only through its one manifest scan, so
+  *     a new read helper cannot bring back the listing job.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -88,5 +90,16 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(offending.isEmpty,
       "scaladoc links to nothing in src/main:\n" + offending.mkString("\n"))
+  }
+
+  test("TxnTable reads data files only through its one manifest scan") {
+    val text = sources.collectFirst { case ("graft/sources/TxnLog.scala", t) => t }
+      .getOrElse(fail("graft/sources/TxnLog.scala not found"))
+    val direct = text.linesIterator.zipWithIndex.collect {
+      case (line, i) if line.contains("spark.read") => s"TxnLog.scala:${i + 1}: ${line.trim}"
+    }.toSeq
+    assert(direct.isEmpty, "data-file reads outside the manifest scan:\n" + direct.mkString("\n"))
+    assert("""ManifestScan\.parquet\(""".r.findAllMatchIn(text).size == 1,
+      "exactly one manifest scan builds TxnTable's relations")
   }
 }

@@ -1,9 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{TxnConflictException, TxnTable}
+import graft.sources.{TxnConflictException, TxnEntry, TxnTable}
 
 /** Crash-safety gate for the version-file transaction log: a writer dying
   * at ANY point before the manifest rename must leave readers on the prior
@@ -401,5 +405,158 @@ class TxnLogSpec extends AnyFunSuite {
     t.vacuum(0L)
     assert(t.version() == 5)
     assert(t.read().as[Long].collect().toSet == Set(1L, 2L, 3L, 4L, 99L))
+  }
+
+  // ------------------------------------------------- manifest scan parity
+
+  private def dataFile(t: TxnTable, e: TxnEntry): String =
+    Paths.get(t.root, "data", e.part, e.file).toString
+
+  /** The reader every TxnTable read used before the manifest scan. */
+  private def listedRead(t: TxnTable, es: Seq[TxnEntry]): DataFrame =
+    spark.read.option("basePath", Paths.get(t.root, "data").toString)
+      .option("mergeSchema", "true")
+      .parquet(es.map(dataFile(t, _)): _*)
+
+  private def assertSameAsListed(ours: DataFrame, listed: DataFrame): Unit = {
+    assert(ours.schema == listed.schema,
+      s"schema ${ours.schema.simpleString} != ${listed.schema.simpleString}")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(rows(ours) == rows(listed))
+  }
+
+  /** `build`'s result and the descriptions of the jobs it launches on this
+    * thread. A marker job after it flushes the asynchronous listener bus
+    * in order. */
+  private def jobsOf[T](build: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val group = s"txn-scan-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add(Option(j.properties.getProperty("spark.job.description")).getOrElse(""))
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "")
+      val out = try {
+        val built = build
+        sc.setJobDescription(marker)
+        sc.parallelize(Seq(1), 1).count()
+        built
+      } finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(seen.contains(marker), "listener bus did not deliver the marker job")
+      (out, seen.asScala.toSeq.takeWhile(_ != marker))
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def listingJobs(jobs: Seq[String]): Seq[String] =
+    jobs.filter(_.startsWith("Listing leaf files"))
+
+  test("manifest scan: every read equals the listed mergeSchema read, with no listing job") {
+    val t = TxnTable(spark, Files.createTempDirectory("graft_txn").toString,
+      statsColumns = Seq("id"))
+    // 40 partitions of one file each: past the 32-path parallel-listing threshold
+    val base = spark.range(0, 400).select(col("id"),
+      (col("id") / 10).cast("int").as("p"), (col("id") * 3).as("v")).coalesce(1)
+    val (_, writes) = jobsOf {
+      t.overwrite(base, Seq("p"))
+      // schema-evolving upsert: `note` is new, ids 5 and 12 match, 1000 inserts
+      t.upsert(Seq((5L, 0, 50L, "x"), (12L, 1, 120L, "y"), (1000L, 100, 7L, "z"))
+        .toDF("id", "p", "v", "note"), Seq("id"), Seq("p"))
+    }
+    assert(t.version() == 2 && t.entriesFull(1).size == 40)
+    assert(listingJobs(writes).isEmpty, s"writes listed files: $writes")
+
+    val v1 = t.entriesFull(1)
+    val v2 = t.entriesFull(2)
+    val (_, firstRead) = jobsOf(t.read())
+    val (_, repeatRead) = jobsOf(t.read())
+    assert(firstRead.size <= 1 && listingJobs(firstRead).isEmpty,
+      s"first read of a new file set: $firstRead")
+    assert(repeatRead.isEmpty, s"repeat read launched jobs: $repeatRead")
+    // the listed form on the same files does list: the check has teeth
+    val (_, parentJobs) = jobsOf(listedRead(t, v2))
+    assert(listingJobs(parentJobs).nonEmpty, s"listed read: $parentJobs")
+
+    val keep = Set("p=0", "p=3", "p=100")
+    val box = col("id").between(15L, 35L)
+    val (Seq(cur, old, parts, where, d), reads) = jobsOf(Seq(t.read(), t.readVersion(1),
+      t.readParts()(keep), t.readWhere(Seq(("id", 15L, 35L))), t.changes(1, 2)))
+    assert(listingJobs(reads).isEmpty, s"reads listed files: $reads")
+    val hits = v2.filter(_.statFor("id").forall(st =>
+      BigDecimal(st.max) >= 15 && BigDecimal(st.min) <= 35))
+    assert(hits.nonEmpty && hits.size < v2.size)
+    assertSameAsListed(cur, listedRead(t, v2))
+    assert(cur.schema("p").dataType == IntegerType)
+    assert(cur.columns.toSeq == Seq("id", "v", "note", "p"))
+    assertSameAsListed(old, listedRead(t, v1))
+    assertSameAsListed(parts, listedRead(t, v2.filter(e => keep(e.part))))
+    assertSameAsListed(where, listedRead(t, hits).filter(box))
+
+    // changes(1, 2) against the multiset difference of the listed full reads
+    val cols = d.columns.toSeq.filterNot(_ == "_change_type")
+    val listed2 = listedRead(t, v2)
+    cols.filter(listed2.columns.contains).foreach(c =>
+      assert(d.schema(c).dataType == listed2.schema(c).dataType, c))
+    def byName(df: DataFrame): Seq[String] = df.collect().toSeq.map(r =>
+      cols.map(c => if (r.schema.fieldNames.contains(c)) String.valueOf(r.getAs[Any](c))
+                    else "null").mkString("|"))
+    def minus(a: Seq[String], b: Seq[String]): Seq[String] =
+      b.foldLeft(a)((acc, x) => acc.diff(Seq(x))).sorted
+    val (before, after) = (byName(listedRead(t, v1)), byName(listed2))
+    def kind(k: String) = byName(d.filter(col("_change_type") === k)).sorted
+    assert(kind("insert") == minus(after, before))
+    assert(kind("delete") == minus(before, after))
+    assert(kind("insert").size == 3 && kind("delete").size == 2)
+  }
+
+  test("manifest scan: a data file removed out of band fails the read, naming it") {
+    val t = freshTable()
+    t.overwrite(Seq((1L, 1), (2L, 2)).toDF("id", "p"), Seq("p"))
+    t.read(): Unit
+    val gone = t.entriesFull().head
+    Files.delete(Paths.get(dataFile(t, gone)))
+    val e = intercept[java.io.FileNotFoundException](t.read())
+    assert(e.getMessage.contains(gone.file), e.getMessage)
+  }
+
+  test("manifest scan: a root deleted and recreated reads the new rows and schema") {
+    val root = Files.createTempDirectory("graft_txn").toString
+    TxnTable(spark, root).overwrite(Seq((1L, "a")).toDF("id", "name"))
+    assert(TxnTable(spark, root).read().columns.toSeq == Seq("id", "name"))
+    val walk = Files.walk(Paths.get(root))
+    try walk.iterator.asScala.toSeq.reverse.foreach(Files.delete(_)) finally walk.close()
+    // same root, same version number, different files and schema
+    val t = TxnTable(spark, root)
+    t.overwrite(Seq((7L, 3.5, 9)).toDF("key", "score", "n"))
+    assert(t.version() == 1)
+    assert(t.read().columns.toSeq == Seq("key", "score", "n"))
+    assert(t.read().as[(Long, Double, Int)].collect().toSeq == Seq((7L, 3.5, 9)))
+  }
+
+  test("manifest scan: a changed parquet schema conf is never served a stale schema") {
+    // Spark-written footers carry their own schema, so the conversion
+    // settings that show on them are the ones the footer merge reads
+    val t = freshTable()
+    t.overwrite(Seq((1L, 10)).toDF("id", "a"))
+    t.append(Seq((2L, 20)).toDF("id", "A"))
+    val key = "spark.sql.caseSensitive"
+    val prior = spark.conf.getOption(key)
+    // (which spelling a case-insensitive merge keeps follows file order)
+    def folded() = t.read().columns.map(_.toLowerCase).toSeq
+    try {
+      spark.conf.set(key, "false")
+      assert(folded() == Seq("id", "a"))
+      spark.conf.set(key, "true")
+      assert(t.read().columns.toSet == Set("id", "a", "A"))
+      assertSameAsListed(t.read(), listedRead(t, t.entriesFull()))
+      spark.conf.set(key, "false")
+      assert(folded() == Seq("id", "a"))
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
